@@ -12,11 +12,11 @@ idempotent table writes:
      started_at, finished_at, input_snapshot)`` — the lineage record the
      reference kept per job (``queue.py:36-53``), now per partition.
 
-Resume = broadcast anti-join of the corpus against completed partition ids:
-only unfinished partitions are re-read and re-extracted.  Crash windows:
-die during (1) -> no checkpoint row, partition re-runs, overwrite is
-idempotent; die between (1) and (2) -> same.  Exactly-once output, no
-coordination service.
+Resume = a filter of the corpus to the partition ids with no completed
+row, wave by wave on a fixed grid: only unfinished partitions are re-read
+and re-extracted.  Crash windows: die during (1) -> no checkpoint row,
+partition re-runs, overwrite is idempotent; die between (1) and (2) ->
+same.  Exactly-once output, no coordination service.
 
 ``partition_id = pmod(xxhash64(url), n_partitions)`` is a pure function of
 the row, so lineage is stable across cluster sizes and retries (the same
@@ -29,7 +29,7 @@ import datetime
 import logging
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.extract import extract_pages
@@ -60,24 +60,70 @@ def url_digest_expr(col: str = "url") -> F.Column:
     return F.unhex(F.md5(col))
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop FileSystem API (local,
+    HDFS and S3A paths alike)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def _read_parquet_if_exists(
     spark: SparkSession, path: str, schema: str | None = None
 ) -> DataFrame | None:
     """Read ``path`` or return None ONLY if the path does not exist.
 
-    Any other read failure (permissions, corrupt footer, transient FS
-    error) re-raises: treating those as "first run" would silently
-    reprocess the whole input and duplicate output rows (ADVICE r2)."""
-    from pyspark.errors import AnalysisException
-
+    Existence is checked up front rather than inferred from a failed
+    read, so a first run logs no PATH_NOT_FOUND query failure.  Any read
+    failure of an existing path (permissions, corrupt footer, transient
+    FS error, no parquet to infer a schema from) re-raises: treating
+    those as "first run" would silently reprocess the whole input and
+    duplicate output rows (ADVICE r2)."""
+    if not _path_exists(spark, path):
+        return None
     reader = spark.read.schema(schema) if schema else spark.read
-    try:
-        return reader.parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
+    return reader.parquet(path)
+
+
+def _local_frame(spark: SparkSession, schema: str, rows: list[tuple]) -> DataFrame:
+    """``rows`` as a LocalRelation: an inline VALUES table.
+
+    ``createDataFrame(list)`` ships pickled rows through a Python RDD:
+    every collect or write of it is a Python-worker job with one task per
+    core.  A LocalRelation collects with no Spark job at all and writes
+    from the JVM alone.  Integers are written into the SQL text; every
+    other value is a named parameter, one per distinct value, so strings
+    are never spliced into SQL and a wave's repeated run id and
+    timestamps cross py4j once.  Columns are cast to ``schema`` once,
+    outside VALUES (a cast per cell makes analysis grow steeply with the
+    row count).  A datetime becomes the same epoch microseconds
+    ``createDataFrame`` stores (naive = the Python process's local time),
+    so timestamps round-trip unchanged."""
+    fields = [f.split() for f in schema.split(",")]
+    args: dict[str, object] = {}
+    params: dict[tuple, str] = {}  # (type, value) -> parameter name
+
+    def cell(value) -> str:
+        if value is None:
+            return "NULL"
+        if isinstance(value, int) and not isinstance(value, bool):
+            return str(value)
+        # named: positional markers misbind inside VALUES
+        key = (type(value), value)
+        if key not in params:
+            params[key] = f"p{len(params)}"
+            args[params[key]] = value
+        return f":{params[key]}"
+
+    # VALUES needs a row: an empty frame is a NULL row under an
+    # always-false filter, which the optimizer folds to an empty relation
+    values = ", ".join(
+        "(" + ", ".join(map(cell, row)) + ")"
+        for row in rows or [(None,) * len(fields)]
+    )
+    cols = ", ".join(f"c{i}" for i in range(len(fields)))
+    casts = ", ".join(f"CAST(c{i} AS {t}) AS {n}" for i, (n, t) in enumerate(fields))
+    sql = f"SELECT {casts} FROM VALUES {values} AS t({cols})"
+    return spark.sql(sql if rows else sql + " WHERE false", args=args)
 
 
 def completed_partitions(
@@ -86,7 +132,7 @@ def completed_partitions(
     """Distinct partition_ids already completed for this (run, snapshot)."""
     ckpt = _read_parquet_if_exists(spark, checkpoint_path, CHECKPOINT_SCHEMA)
     if ckpt is None:  # first run: no checkpoint table yet
-        return spark.createDataFrame([], "partition_id int")
+        return _local_frame(spark, "partition_id int", [])
     return (
         ckpt.where(
             (F.col("run_id") == run_id)
@@ -379,6 +425,43 @@ def stage_bucketed_table(
     return spark.table(table)
 
 
+def wave_grid(n_partitions: int, n_waves: int, done_ids=()) -> list[list[int]]:
+    """The waves still to run, as lists of partition ids.
+
+    The grid is fixed by ``(n_partitions, n_waves)`` alone: wave g covers
+    ids ``[g*s, (g+1)*s)`` with ``s = ceil(n_partitions / n_waves)``.  A
+    resume drops ``done_ids`` from each grid wave and skips emptied ones,
+    so it runs only the waves a kill left unfinished, each as wide as
+    before — re-splitting the leftover ids into ``n_waves`` narrower waves
+    would pay the fixed per-wave cost again on fewer busy cores."""
+    size = -(-n_partitions // max(1, n_waves))
+    waves = []
+    for start in range(0, n_partitions, size):
+        ids = [i for i in range(start, min(start + size, n_partitions)) if i not in done_ids]
+        if ids:
+            waves.append(ids)
+    return waves
+
+
+def extract_wave(wave: DataFrame, n_ids: int) -> DataFrame:
+    """A wave's rows as written: ``bytes_in`` and ``extract_pages`` run
+    narrow over the wave's scan, whose tasks are balanced by file splits
+    (or by buckets on a bucketed source); only then does one exchange
+    hash-partition the extracted rows on partition_id, so the
+    ``partitionBy`` write emits one file per partition dir.
+
+    Exchanging first instead would hash ``n_ids`` small integers into
+    ``n_ids`` buckets, and Murmur3 collides: ids 0-3 land in buckets
+    3, 3, 2, 3 of 4 and ids 4-5 both in bucket 0 of 2, so most extraction
+    tasks got no rows and most Python workers idled.  Exchanging after
+    extraction also moves the extracted text, not the larger raw html."""
+    extracted = extract_pages(
+        wave.withColumn("bytes_in", F.octet_length("html").cast("long")),
+        passthrough=("partition_id", "bytes_in"),
+    )
+    return extracted.repartition(n_ids, F.col("partition_id"))
+
+
 def run_with_checkpoint(
     spark: SparkSession,
     pages: DataFrame,
@@ -401,13 +484,19 @@ def run_with_checkpoint(
     reference exposed over HTTP (``job_manager.py:108-150``), here a
     driver-side hook (also logged on ``gonova.checkpoint``).
 
-    Work proceeds in ``n_waves`` commit units: each wave extracts a slice of
-    the todo partitions, commits its data (dynamic partition overwrite) and
-    then its checkpoint rows.  A kill loses at most the in-flight wave; the
-    next invocation anti-joins completed partitions and redoes only the
-    rest.  Returns {run_id, partitions_done_before, partitions_total,
-    n_docs, n_ok, n_err}.  Safe to call repeatedly with the same run_id: a
-    fully-completed run is a no-op.
+    Work proceeds in commit units on a fixed wave grid (``wave_grid``):
+    wave g covers partition ids ``[g*s, (g+1)*s)``, ``s = ceil(n_partitions
+    / n_waves)``.  Each wave extracts its partitions narrow over the scan
+    (``extract_wave``), commits its data (dynamic partition overwrite) and
+    then its checkpoint rows, one file per wave.  A kill loses at most the
+    in-flight wave; the next invocation skips completed partition ids and
+    runs only the grid waves that still hold unfinished ones, at their
+    original width: killed after wave 1 of 2, a resume runs one wave.  In
+    ``on_progress``, ``wave`` counts from 1 over this invocation's waves
+    and ``n_waves`` is how many it runs.  Returns {run_id,
+    partitions_done_before, partitions_total, n_docs, n_ok, n_err}.  Safe
+    to call repeatedly with the same run_id: a fully-completed run is a
+    no-op.
 
     Metrics ride the write pass via ``df.observe`` (per-partition
     conditional aggregates, retry-safe, computed by the same job that
@@ -462,7 +551,8 @@ def run_with_checkpoint(
             )
     done = completed_partitions(spark, checkpoint_path, run_id, input_snapshot)
     done_ids = {r["partition_id"] for r in done.collect()}  # <= n_partitions ints
-    todo_ids = sorted(set(range(n_partitions)) - done_ids)
+    waves = wave_grid(n_partitions, n_waves, done_ids)
+    todo_ids = [i for ids in waves for i in ids]
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     if stage_source and todo_ids:
@@ -473,39 +563,26 @@ def run_with_checkpoint(
         # small-files explosion); with it each dir gets exactly one file.
         stage_path = f"{output_path}/_staged_source"
         (
-            corpus.where(F.col("partition_id").isin([int(i) for i in todo_ids]))
+            corpus.where(F.col("partition_id").isin(todo_ids))
             .repartition(len(todo_ids), F.col("partition_id"))
             .write.partitionBy("partition_id")
             .mode("overwrite")
             .parquet(stage_path)
         )
         corpus = spark.read.parquet(stage_path)
-    wave_size = max(1, -(-len(todo_ids) // max(1, n_waves))) if todo_ids else 1
-    for w in range(0, len(todo_ids), wave_size):
-        wave_ids = todo_ids[w : w + wave_size]
+    committed = len(done_ids)
+    for k, wave_ids in enumerate(waves, 1):
         started = _now()
-        # Single shuffle per wave, placed *before* extraction: align physical
-        # partitioning with partition_id so (a) extraction is narrow, (b) the
-        # partitionBy write emits one file per partition dir with no second
-        # shuffle of the (large) extracted text.  partition_id is
-        # xxhash64(url)-derived, so this also uniformly spreads hot hosts.
-        wave = (
-            corpus.where(F.col("partition_id").isin([int(i) for i in wave_ids]))
-            .withColumn("bytes_in", F.octet_length("html").cast("long"))
-            .repartition(len(wave_ids), F.col("partition_id"))
-        )
-        extracted = extract_pages(wave, passthrough=("partition_id", "bytes_in"))
+        wave = corpus.where(F.col("partition_id").isin(wave_ids))
         # per-partition metrics as observed metrics on the write job itself:
         # one conditional aggregate triple per wave partition id, evaluated
         # JVM-side during the write — no second pass over the extracted text.
         # (Expression count is 3 * wave_size; with very wide waves either
         # raise n_waves or flip verify_readback on and meter from the data.)
-        from pyspark.sql import Observation
-
-        obs = Observation(f"wave-{run_id}-{w}")
+        obs = Observation(f"wave-{run_id}-{wave_ids[0]}")
         exprs = []
         for pid in wave_ids:
-            p = F.col("partition_id") == int(pid)
+            p = F.col("partition_id") == pid
             exprs.append(
                 F.sum(F.when(p & F.col("success"), 1).otherwise(0)).alias(f"ok_{pid}")
             )
@@ -516,7 +593,8 @@ def run_with_checkpoint(
                 F.sum(F.when(p, F.col("bytes_in")).otherwise(0)).alias(f"bytes_{pid}")
             )
         (
-            extracted.observe(obs, *exprs)
+            extract_wave(wave, len(wave_ids))
+            .observe(obs, *exprs)
             .write.partitionBy("partition_id")
             .mode("overwrite")
             .parquet(output_path)
@@ -527,9 +605,11 @@ def run_with_checkpoint(
             # row: completed => digested.  Narrow url-only scan (column-
             # pruned; file-pruned too under stage_source), idempotent
             # dynamic overwrite per partition dir — a re-run wave rewrites
-            # its digests in place, never duplicates them.
+            # its digests in place, never duplicates them.  The exchange
+            # gives each digest dir one file, as extract_wave does for data.
             (
                 wave.select("partition_id", url_digest_expr("url").alias("url_digest"))
+                .repartition(len(wave_ids), F.col("partition_id"))
                 .write.partitionBy("partition_id")
                 .mode("overwrite")
                 .parquet(digest_path)
@@ -542,7 +622,7 @@ def run_with_checkpoint(
             ckpt_rows.append(
                 (
                     run_id,
-                    int(pid),
+                    pid,
                     "completed",
                     n_ok + n_err,
                     n_ok,
@@ -557,7 +637,7 @@ def run_with_checkpoint(
             meter = {
                 r["partition_id"]: r
                 for r in spark.read.parquet(output_path)
-                .where(F.col("partition_id").isin([int(i) for i in wave_ids]))
+                .where(F.col("partition_id").isin(wave_ids))
                 .groupBy("partition_id")
                 .agg(
                     F.count(F.lit(1)).alias("n_docs"),
@@ -581,16 +661,18 @@ def run_with_checkpoint(
                         f"observed {(n_docs, n_ok, n_err, n_bytes)} vs "
                         f"read-back {got_back}"
                     )
-        spark.createDataFrame(ckpt_rows, CHECKPOINT_SCHEMA).write.mode(
+        # one JVM task, one file per wave commit
+        _local_frame(spark, CHECKPOINT_SCHEMA, ckpt_rows).coalesce(1).write.mode(
             "append"
         ).parquet(checkpoint_path)
+        committed += len(wave_ids)
         wave_docs = sum(r[3] for r in ckpt_rows)
         wave_secs = max((finished - started).total_seconds(), 1e-9)
         progress = {
             "run_id": run_id,
-            "wave": w // wave_size + 1,
-            "n_waves": -(-len(todo_ids) // wave_size),
-            "partitions_done": len(done_ids) + w + len(wave_ids),
+            "wave": k,
+            "n_waves": len(waves),
+            "partitions_done": committed,
             "partitions_total": n_partitions,
             "n_docs": wave_docs,
             "n_ok": sum(r[4] for r in ckpt_rows),

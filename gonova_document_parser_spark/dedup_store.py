@@ -148,11 +148,16 @@ def _pin_store_params(spark: SparkSession, store_path: str, params: dict) -> Non
         finally:
             out.close()
         _, dst = _fs_and_path(spark, _params_path(store_path))
-        if not fs.rename(tmp, dst):
+        fs.rename(tmp, dst)
+        # read back what the rename left: HDFS refuses to rename onto an
+        # existing file, but the local FS silently overwrites it — either
+        # way a concurrent first run with other params may own the file
+        # now, and only the re-read tells which one won (ADVICE r6)
+        existing = read_store_params(spark, store_path)
+        if existing is None:
             raise IOError(
                 f"could not commit {_params_path(store_path)} (rename failed)"
             )
-        return
     if existing != params:
         raise ValueError(
             f"store at {store_path} is pinned to {existing} but this run "

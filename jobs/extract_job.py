@@ -7,7 +7,11 @@ Usage:
       [--digests] [--bucketed-table NAME]
 
 ``n_waves`` sets commit granularity (fewer waves = faster, larger at-risk
-window on a kill); ``--verify`` re-reads each written wave and asserts the
+window on a kill) on a fixed wave grid: wave g commits partition ids
+``[g*s, (g+1)*s)`` with ``s = ceil(n_partitions / n_waves)``, and a
+resume runs only the grid waves that still hold unfinished ids, at their
+original width (killed after wave 1 of 2, the re-run commits one wave;
+its progress lines count waves from 1 again); ``--verify`` re-reads each written wave and asserts the
 observed metrics match (audit mode, 2x read cost); ``--stage-source``
 writes the partition_id-augmented source once so each wave's scan
 file-prunes instead of re-reading the full input (pays off as n_waves

@@ -6,6 +6,8 @@ erasing half the checkpoint rows + their output dirs, then asserting the
 re-run restores exactly the missing partitions (no dup/missing urls).
 """
 
+import datetime
+import glob
 import shutil
 
 import pyspark.sql.functions as F
@@ -13,7 +15,10 @@ import pytest
 
 from gonova_document_parser_spark.checkpoint import (
     completed_partitions,
+    extract_wave,
+    partitioned,
     run_with_checkpoint,
+    wave_grid,
 )
 from gonova_document_parser_spark.corpus import generate_pages
 
@@ -117,6 +122,16 @@ def test_partition_id_is_stable_function_of_url(spark):
 def test_completed_partitions_empty_when_no_table(spark, tmp_path):
     df = completed_partitions(spark, str(tmp_path / "nope"), "r1", "")
     assert df.count() == 0
+    # a first run's lookup is an empty local relation: collecting it
+    # schedules no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("first-run-lookup", "first-run-lookup")
+    try:
+        assert df.collect() == []
+        assert list(sc.statusTracker().getJobIdsForGroup("first-run-lookup")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_zero_doc_partitions_get_checkpoint_rows(spark, paths):
@@ -415,3 +430,108 @@ def test_stage_source_run_and_resume(spark, paths, tmp_path):
     result = spark.read.parquet(out)
     assert result.count() == N_DOCS
     assert result.select("url").distinct().count() == N_DOCS
+
+
+class _Killed(Exception):
+    """Raised from on_progress to kill a run at a wave boundary."""
+
+
+def test_wave_grid_is_fixed_across_invocations():
+    assert wave_grid(8, 2) == [[0, 1, 2, 3], [4, 5, 6, 7]]
+    assert wave_grid(8, 3) == [[0, 1, 2], [3, 4, 5], [6, 7]]
+    # a resume keeps each grid wave at its width minus finished ids, and
+    # drops grid waves with nothing left
+    assert wave_grid(8, 2, {0, 1, 2, 3}) == [[4, 5, 6, 7]]
+    assert wave_grid(8, 3, {0, 1, 2, 4}) == [[3, 5], [6, 7]]
+    assert wave_grid(8, 2, set(range(8))) == []
+    # more waves than partitions: one partition per wave
+    assert wave_grid(3, 8) == [[0], [1], [2]]
+
+
+def test_wave_extracts_before_partition_exchange(spark, tmp_path):
+    """A wave's MapInPandas reads the (file-split-balanced) scan directly;
+    the one hashpartitioning(partition_id) exchange sits above it, feeding
+    the partitionBy write.  Below extraction, an exchange of a few small
+    integers into as many buckets would leave most Python workers idle."""
+    src = str(tmp_path / "pages")
+    generate_pages(spark, 80, num_partitions=4).write.parquet(src)
+    wave = partitioned(spark.read.parquet(src), N_PARTS).where(
+        F.col("partition_id").isin([0, 1, 2, 3])
+    )
+    lines = extract_wave(wave, 4)._jdf.queryExecution().executedPlan().toString()
+    lines = lines.splitlines()
+    at = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    above, below = "\n".join(lines[:at]), "\n".join(lines[at + 1 :])
+    assert "Exchange hashpartitioning(partition_id" in above
+    assert "Exchange" not in below
+    assert "FileScan parquet" in below
+
+
+@pytest.mark.parametrize(
+    "n_waves, resumed_done", [(2, [N_PARTS]), (3, [6, N_PARTS])]
+)
+def test_kill_after_first_wave_resumes_unfinished_grid_waves(
+    spark, paths, n_waves, resumed_done
+):
+    """Killed at wave 1, a resume commits only the grid waves left, at
+    their original width — one wave for n_waves=2 (re-splitting the four
+    leftover ids into n_waves waves would commit two) — and the output
+    holds every input url exactly once."""
+    out, ckpt = paths
+    pages = generate_pages(spark, N_DOCS, num_partitions=4)
+    kw = dict(run_id="rk", n_partitions=N_PARTS, n_waves=n_waves)
+
+    def kill(progress):
+        if progress["wave"] == 1:
+            raise _Killed()
+
+    with pytest.raises(_Killed):
+        run_with_checkpoint(spark, pages, out, ckpt, on_progress=kill, **kw)
+    seen = []
+    s = run_with_checkpoint(spark, pages, out, ckpt, on_progress=seen.append, **kw)
+
+    first = len(wave_grid(N_PARTS, n_waves)[0])
+    assert s["partitions_done_before"] == first
+    assert [p["partitions_done"] for p in seen] == resumed_done
+    assert [p["wave"] for p in seen] == list(range(1, len(resumed_done) + 1))
+    assert all(p["n_waves"] == len(resumed_done) for p in seen)
+    assert s["n_docs"] == N_DOCS
+    result = spark.read.parquet(out)
+    want = {r["url"] for r in pages.select("url").collect()}
+    assert result.count() == N_DOCS
+    assert {r["url"] for r in result.select("url").collect()} == want
+
+
+def test_checkpoint_rows_round_trip_one_file_per_wave(spark, paths, monkeypatch):
+    """Checkpoint rows keep their types and exact timestamp values (the
+    epoch microseconds createDataFrame stores for the same naive
+    datetimes), every row of a wave shares its started/finished pair, and
+    each wave commit appends exactly one file."""
+    from gonova_document_parser_spark import checkpoint
+
+    out, ckpt = paths
+    base = datetime.datetime(2026, 3, 1, 12, 0, 0, 123457)
+    stamps = [base + datetime.timedelta(seconds=7 * i, microseconds=i) for i in range(4)]
+    calls = iter(stamps)  # started, finished per wave; two waves
+    monkeypatch.setattr(checkpoint, "_now", lambda: next(calls))
+    pages = generate_pages(spark, 40, num_partitions=2)
+    run_with_checkpoint(spark, pages, out, ckpt, run_id="rt", n_partitions=4, n_waves=2)
+
+    ck = spark.read.parquet(ckpt)
+    assert ck.dtypes == spark.createDataFrame([], checkpoint.CHECKPOINT_SCHEMA).dtypes
+    micros = F.unix_micros
+    got = ck.select(
+        "partition_id", "started_at", "finished_at",
+        micros("started_at").alias("s_us"), micros("finished_at").alias("f_us"),
+    ).orderBy("partition_id").collect()
+    ref = spark.createDataFrame(
+        [(stamps[0], stamps[1])] * 2 + [(stamps[2], stamps[3])] * 2,
+        "started_at timestamp, finished_at timestamp",
+    ).select(
+        "started_at", "finished_at",
+        micros("started_at").alias("s_us"), micros("finished_at").alias("f_us"),
+    ).collect()
+    assert [r["partition_id"] for r in got] == [0, 1, 2, 3]
+    assert [tuple(r)[1:] for r in got] == [tuple(r) for r in ref]
+    assert [r["started_at"] for r in got] == [stamps[0]] * 2 + [stamps[2]] * 2
+    assert len(glob.glob(f"{ckpt}/part-*")) == 2

@@ -290,3 +290,46 @@ def test_params_sidecar_commit_is_atomic(spark, tmp_path):
     assert read_store_params(spark, store) == {
         "hash_fn": "xxhash64", "n": 3, "num_hashes": 32, "bands": 8,
     }
+
+
+def test_params_commit_rereads_after_rename(spark, tmp_path, monkeypatch):
+    """ADVICE r6: a local-FS rename silently overwrites an existing file,
+    so two concurrent first runs with different parameterizations could
+    both 'commit' _params.json.  The commit re-reads the file after its
+    rename: when a rival run's rename landed last, this run raises
+    instead of appending bands under params the store no longer holds."""
+    import json
+    import os
+
+    from gonova_document_parser_spark import dedup_store
+
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    ours = {"hash_fn": "xxhash64", "n": 3, "num_hashes": 32, "bands": 8}
+    rival = dict(ours, hash_fn="affine")
+    real_read = dedup_store.read_store_params
+    reads = []
+
+    def racing_read(spark_, path):
+        reads.append(path)
+        if len(reads) == 1:  # the pre-commit check: the store looks fresh
+            return None
+        # the rival's rename lands last (written through Hadoop's local FS,
+        # which keeps the checksum sidecar in step)
+        fs, p = dedup_store._fs_and_path(spark_, f"{store}/_params.json")
+        out = fs.create(p, True)
+        out.write(bytearray(json.dumps(rival).encode()))
+        out.close()
+        return real_read(spark_, path)
+
+    monkeypatch.setattr(dedup_store, "read_store_params", racing_read)
+    with pytest.raises(ValueError, match="pinned to"):
+        dedup_store._pin_store_params(spark, store, ours)
+    assert len(reads) == 2
+
+    # without a rival, the re-read finds this run's own params
+    monkeypatch.setattr(dedup_store, "read_store_params", real_read)
+    fresh = str(tmp_path / "fresh")
+    os.makedirs(fresh)
+    dedup_store._pin_store_params(spark, fresh, ours)
+    assert real_read(spark, fresh) == ours
