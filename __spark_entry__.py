@@ -32,10 +32,7 @@ from gonova_document_parser_spark.functions.dedup import (
     ngram_jaccard_pairs,
     simhash64,
 )
-from gonova_document_parser_spark.functions.similarity import (
-    ann_topk_lsh,
-    brute_force_topk,
-)
+from gonova_document_parser_spark.functions.similarity import brute_force_topk
 from gonova_document_parser_spark.functions.textstats import (
     STOPWORDS,
     lang_id_expr,
@@ -378,8 +375,7 @@ def _q_emb_topk_cosine(spark, sf_dir):
 def _q_ann_topk_lsh(spark, sf_dir):
     # integer-quantized variant: bucket sign tests are exact integer math,
     # so the candidate set (and result) is engine-reproducible — hard
-    # DuckDB oracle.  Float-hyperplane variants (expression + numpy paths,
-    # recall@10 0.95 measured) remain for production and are pytest-pinned.
+    # DuckDB oracle.
     from gonova_document_parser_spark.functions.similarity import (
         ann_topk_lsh_quantized,
     )
@@ -1536,10 +1532,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # row at most ~2 rounds old.  Round 6 therefore heads the 23 entries
     # whose newest row is CORRECTNESS_r04 (topic_mix .. contamination — all
     # displaced in r5), followed by 27 of the 50 recorded green in
-    # CORRECTNESS_r05; the 23 entries displaced past position 50 below ALL
-    # hold green rows+schema+hash rows in CORRECTNESS_r05.json, so the
-    # r5 union r6 snapshots again cover all 73 queries with no row older
-    # than one round.
+    # CORRECTNESS_r05.  The r5 and r6 snapshots record the same 50 names, so
+    # their union covers 50 of the 73 queries; the 23 entries past position
+    # 50 have no green row in either and rely on the rotation (and the
+    # pytest oracle suite) until they move into the head again.
     return {
         # --- head: newest green row is r4 (rotated in this round) --------
         "topic_mix": _q_topic_mix,
@@ -3048,7 +3044,9 @@ def oracle_sql() -> dict[str, str]:
                            ORDER BY length(r.pattern) DESC, r.allow DESC,
                                     r.pattern DESC) AS rn
                 FROM keyed k
-                JOIN grp r ON k.host = r.host AND regexp_matches(k.path, r.rx))
+                JOIN grp r ON k.host = r.host
+                              AND length(r.pattern) > 0
+                              AND regexp_matches(k.path, r.rx))
             SELECT k.doc_id, k.url,
                    COALESCE(m.allow, TRUE) AS allowed,
                    m.pattern AS matched_pattern

@@ -366,7 +366,7 @@ def stage_bucketed_table(
     partition count, so every wave reads ~wave_size/n_partitions of the
     corpus instead of all of it, turning n_waves x corpus total scan
     volume into ~1 x corpus with zero extra copies on any re-run or
-    resume (the table persists; ``--stage-source`` rewrites per run).
+    resume (the table persists across runs).
 
     Returns the table as a DataFrame ready for ``run_with_checkpoint``
     (its rows already carry partition_id; ``partitioned`` recomputes the
@@ -474,7 +474,6 @@ def run_with_checkpoint(
     verify_readback: bool = False,
     on_progress=None,
     digest_path: str | None = None,
-    stage_source: bool = False,
 ) -> dict:
     """Extract ``pages`` into ``output_path`` with exact resume.
 
@@ -514,20 +513,17 @@ def run_with_checkpoint(
     ordering guarantees a partition marked completed always has both its
     data and its digests — a crash can at worst re-run one wave in place.
 
-    ``stage_source=True`` writes the partition_id-augmented source ONCE
-    (under ``output_path/_staged_source``, todo partitions only) and runs
-    every wave off that staging: wave scans then file-prune to their own
-    partition directories instead of re-reading the full input n_waves
-    times.  Worth it when n_waves is large or the source is remote/an
-    unpartitioned table; costs one extra full write+read of the input.
-    On an Iceberg corpus, bucketing the table by url achieves the same
-    pruning with no staging copy.
+    Every wave re-scans the source and filters it to its partition ids.
+    For a source where that scan should prune to the wave's own files,
+    pass the table that ``stage_bucketed_table`` writes once (bucketed by
+    ``partition_id``): it persists across runs and resumes, so no per-run
+    staging copy is needed.
     """
     run_id = run_id or uuid.uuid4().hex
 
     # A source that ALREADY carries partition_id (stage_bucketed_table's
-    # output, or a restaged copy) must keep its stored COLUMN: recomputing
-    # via withColumn would replace the bucketed table's attribute with a
+    # output) must keep its stored COLUMN: recomputing via withColumn
+    # would replace the bucketed table's attribute with a
     # fresh pmod(xxhash64(url)) expression — same values, but the wave
     # filter then no longer references the bucket column and bucket
     # pruning silently turns off (verified in the executed plan).  The
@@ -552,24 +548,8 @@ def run_with_checkpoint(
     done = completed_partitions(spark, checkpoint_path, run_id, input_snapshot)
     done_ids = {r["partition_id"] for r in done.collect()}  # <= n_partitions ints
     waves = wave_grid(n_partitions, n_waves, done_ids)
-    todo_ids = [i for ids in waves for i in ids]
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if stage_source and todo_ids:
-        # one pass over the source now; every wave scan below file-prunes
-        # to its own partition_id dirs (resume restages only todo dirs).
-        # repartition BY partition_id first: without it every source scan
-        # task writes a file into every partition dir (n_dirs x n_tasks
-        # small-files explosion); with it each dir gets exactly one file.
-        stage_path = f"{output_path}/_staged_source"
-        (
-            corpus.where(F.col("partition_id").isin(todo_ids))
-            .repartition(len(todo_ids), F.col("partition_id"))
-            .write.partitionBy("partition_id")
-            .mode("overwrite")
-            .parquet(stage_path)
-        )
-        corpus = spark.read.parquet(stage_path)
     committed = len(done_ids)
     for k, wave_ids in enumerate(waves, 1):
         started = _now()
@@ -603,10 +583,11 @@ def run_with_checkpoint(
         if digest_path is not None:
             # digests commit AFTER the wave's data, BEFORE its checkpoint
             # row: completed => digested.  Narrow url-only scan (column-
-            # pruned; file-pruned too under stage_source), idempotent
-            # dynamic overwrite per partition dir — a re-run wave rewrites
-            # its digests in place, never duplicates them.  The exchange
-            # gives each digest dir one file, as extract_wave does for data.
+            # pruned; bucket-pruned on a stage_bucketed_table source),
+            # idempotent dynamic overwrite per partition dir — a re-run wave
+            # rewrites its digests in place, never duplicates them.  The
+            # exchange gives each digest dir one file, as extract_wave does
+            # for data.
             (
                 wave.select("partition_id", url_digest_expr("url").alias("url_digest"))
                 .repartition(len(wave_ids), F.col("partition_id"))

@@ -44,7 +44,12 @@ def shingles_from_tokens(toks: "F.Column", n: int) -> "F.Column":
     (this expression refers to the token array 2n+1 times; inlining the
     tokenizer here re-split the text ~7x per row for n=3 — the optimizer's
     CollapseProject keeps a non-cheap multi-referenced alias materialized,
-    verified in plans/r06/*_after.txt)."""
+    verified in plans/r06/*_after.txt).
+
+    n shifted O(k) slices zipped per DOC, not per shingle: the naive
+    per-position slice inside the lambda is O(k^2) per doc.  Element i
+    (0-based) starts at token i, so the array position doubles as the
+    shingle's token offset (``duplicated_spans`` relies on this)."""
     m = F.size(toks) - (n - 1)  # number of shingles
     shifted = [F.slice(toks, j + 1, m) for j in range(n)]
     zipped = F.arrays_zip(*shifted)
@@ -55,20 +60,6 @@ def shingles_from_tokens(toks: "F.Column", n: int) -> "F.Column":
             lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)]),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def shingle_array_expr(text_col: str, n: int) -> "F.Column":
-    """array<string> of word n-gram shingles, in token order (no UDF).
-
-    n shifted O(k) slices zipped per DOC, not per shingle: the naive
-    per-position slice inside the lambda is O(k^2) per doc, and
-    element_at-in-lambda is interpreted (measured 3x slower still).
-    Element i (0-based) starts at token i, so array position doubles as
-    the shingle's token offset (``duplicated_spans`` relies on this).
-    Prefer projecting ``tokens_expr`` into a column and calling
-    ``shingles_from_tokens`` on it (see that docstring).
-    """
-    return shingles_from_tokens(tokens_expr(text_col), n)
 
 
 def shingles(
@@ -606,37 +597,31 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Connected components over a near-dup pair list -> (id, cluster_id).
 
-    ``algorithm="label"`` (default) — min-label propagation: every node
-    starts labeled with its own id; each round takes the min over its
-    neighbors' labels; fixpoint when NO label changes in a round (the
-    changed-row count is computed on the same checkpointed round result
-    the next join reuses, and is type-agnostic — it works for string /
-    url ids where a numeric label-sum witness would silently NULL out
-    under the implicit cast and stop after round 1).  Rounds = graph
-    diameter — near-dup clusters are shallow (cliques + short chains),
-    so this converges in a handful of rounds.
+    Min-label propagation first: every node starts labeled with its own
+    id; each round takes the min over its neighbors' labels; fixpoint when
+    NO label changes in a round (the changed-row count is computed on the
+    same checkpointed round result the next join reuses, and is
+    type-agnostic — it works for string / url ids where a numeric
+    label-sum witness would silently NULL out under the implicit cast and
+    stop after round 1).  Rounds = graph diameter — near-dup clusters are
+    shallow (cliques + short chains), so this converges in a handful of
+    rounds.
 
-    ``algorithm="star"`` — alternating large-star/small-star (Kiveris et
-    al., "Connected Components in MapReduce and Beyond"): rounds grow
-    with log(diameter), not diameter, so adversarial long-path graphs
-    (a 10k-node chain) converge in ~tens of rounds instead of 10k.  The
-    pair generators here (band/bucket equi-joins) produce shallow
-    graphs, so "label" stays the default; "star" is the documented
-    escalation for pathological chains at 100 TB.
+    If labels still changed in the last of ``max_iter`` rounds, the labels
+    are not a fixpoint (a 30-node path needs 29 rounds), so the same pairs
+    go to alternating large-star/small-star (``_cc_large_small_star``,
+    Kiveris et al., "Connected Components in MapReduce and Beyond"),
+    whose rounds grow with log(diameter), not diameter: a 10k-node chain
+    converges in ~tens of rounds.  It raises rather than return
+    unconverged labels.  Both give cluster_id = the component's min id.
 
     Each round is a bounded number of equi-joins + groupBy(min);
     ``localCheckpoint`` truncates the growing lineage so round N doesn't
     replay rounds 1..N-1.  Driver-side state is one scalar per round.
     """
-    if algorithm == "star":
-        labels, _ = _cc_large_small_star(pairs, id_a, id_b, max_iter)
-        return labels
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r} (label|star)")
     # checkpoint the raw pair list first: the symmetrizing union otherwise
     # evaluates the (possibly expensive — e.g. the full Jaccard pipeline)
     # pair lineage once per union branch (round 6)
@@ -672,6 +657,7 @@ def connected_components(
     # batch.
     batch = 4
     done = 0
+    changed = None
     while done < max_iter:
         steps = min(batch, max_iter - done)
         upd = None
@@ -699,6 +685,9 @@ def connected_components(
         changed = upd.where(F.col("lbl") != F.col("_old")).count()
         if changed == 0:
             break
+    if changed != 0:
+        labels, _ = _cc_large_small_star(pairs, id_a, id_b)
+        return labels
     return labels.select("id", F.col("lbl").alias("cluster_id"))
 
 
@@ -723,7 +712,8 @@ def _cc_large_small_star(
     test plants a 10k-node path and asserts rounds ≪ n.  Convergence is
     witnessed by edge-set equality (new ⊆ old via subtract-count, plus
     equal distinct counts), which is type-agnostic like the label-count
-    witness above.
+    witness in ``connected_components``, which hands its unconverged
+    inputs here.
 
     Returns (labels, rounds_used); labels is (id, cluster_id) with
     cluster_id = the component's min node id — identical contract to

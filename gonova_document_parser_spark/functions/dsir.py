@@ -38,6 +38,10 @@ from pyspark.sql import Column, DataFrame, functions as F
 from .dedup import _md5_low60
 from .lm import _clean_tokens
 
+# importance_weights checkpoints its occurrence stream below this estimated
+# input size and leaves it lazy above it (see that docstring).
+DSIR_MAT_MAX_BYTES = 256 * 1024 * 1024
+
 
 def _features_of_tokens(ws: Column) -> Column:
     """uni+bigram feature array from a token-array column — the ONE
@@ -154,8 +158,8 @@ def importance_weights(
     (not per-bucket counts), so the float summation stream the 4dp
     cross-engine contract depends on is unchanged.
 
-    Materialization is SIZE-adaptive: below ``GONOVA_DSIR_MAT_MAX_BYTES``
-    of estimated input (default 256 MB) the occurrence stream is
+    Materialization is SIZE-adaptive: below ``DSIR_MAT_MAX_BYTES``
+    of estimated input (256 MB) the occurrence stream is
     ``localCheckpoint``-ed so the totals job, the model build and the
     scoring probe share one computed stream (rebuilt every invocation —
     nothing persists across runs).  Above it — the 100 TB path — the
@@ -165,8 +169,6 @@ def importance_weights(
     executor block storage is neither.  Driver state stays two scalars
     either way.
     """
-    import os
-
     from ..plans.partitioning import EXPR_FANOUT_MIN_BYTES, fan_out
 
     # size-adaptive spread for ALL hash families here: unlike the minhash
@@ -191,8 +193,7 @@ def importance_weights(
         "_t",
         _bucket_of_feature(F.col("feature"), n_buckets, hash_fn).alias("bucket"),
     )
-    mat_max = int(os.environ.get("GONOVA_DSIR_MAT_MAX_BYTES", str(256 * 1024 * 1024)))
-    if est < mat_max:
+    if est < DSIR_MAT_MAX_BYTES:
         occ = occ.localCheckpoint(eager=True)
     row = occ.agg(
         F.count(F.lit(1)).alias("nr"),

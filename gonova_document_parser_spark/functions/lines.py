@@ -28,24 +28,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..plans.partitioning import EXPR_FANOUT_MIN_BYTES, fan_out
 
 
-def line_doc_counts(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(line, n_docs) for every distinct non-empty line in the corpus."""
-    lines = fan_out(
-        df.select(F.col(id_col), F.col(text_col)),
-        min_bytes=EXPR_FANOUT_MIN_BYTES,
-    ).select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), "\r?\n", -1)).alias("line"),
-    )
-    return (
-        lines.where(F.length("line") > 0)
-        .groupBy("line")
-        .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
-    )
-
-
 def line_dedup(
     df: DataFrame,
     max_docs: int = 5,

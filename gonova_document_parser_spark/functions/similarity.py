@@ -2,11 +2,13 @@
 
 Baseline: brute-force cosine top-k with built-in higher-order functions
 (``zip_with`` dot product + ``aggregate`` sum — JVM-side, no UDF).  Scale
-path: random-hyperplane LSH bucketing — each vector hashes to a sign-bit
-bucket per table; only same-bucket pairs are scored, turning the O(n²)
-cross join into per-bucket joins.  Hyperplanes are derived deterministically
-from a seed via xxhash64 (no RNG state), so retries and resume reproduce
-identical buckets.
+paths: integer-quantized random-hyperplane LSH — each vector hashes to a
+sign-bit bucket per table; only same-bucket pairs are scored, turning the
+O(n²) cross join into per-bucket joins — and a materialized IVF index
+(``ivf_materialize`` once, ``ivf_probe`` per query).  Hyperplanes are derived
+deterministically from a seed by integer mixing (no RNG state), and bucket
+bits are exact integer arithmetic, so retries, resume and the DuckDB oracle
+reproduce identical buckets.
 """
 
 from __future__ import annotations
@@ -55,24 +57,6 @@ def brute_force_topk(
     )
 
 
-def pairwise_cosine_neardups(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All pairs with cosine >= threshold (exact; small-scale verifier)."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    cos = cosine_expr(F.col("va"), F.col("vb"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(cos >= threshold)
-        .select("id_a", "id_b", F.round(cos, 4).alias("cosine"))
-    )
-
-
 def _hyperplane(dim: int, table: int, plane: int, seed: int = 42) -> list[float]:
     """Deterministic pseudo-random unit-free hyperplane from integer hashing.
 
@@ -91,104 +75,6 @@ def _hyperplane(dim: int, table: int, plane: int, seed: int = 42) -> list[float]
         x ^= x >> 31
         out.append((x / float(1 << 63)) - 1.0)
     return out
-
-
-def lsh_buckets(
-    df: DataFrame,
-    dim: int,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, table_id, bucket) — sign-bit bucket per hash table, via built-ins."""
-    tables = []
-    for t in range(n_tables):
-        bucket = None
-        for p in range(n_planes):
-            plane = F.array(*[F.lit(v) for v in _hyperplane(dim, t, p, seed)])
-            bit = F.when(dot_expr(F.col(vec_col), plane) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-            bucket = bit if bucket is None else bucket.bitwiseOR(bit)
-        tables.append(F.struct(F.lit(t).alias("table_id"), bucket.alias("bucket")))
-    return df.select(
-        F.col(id_col), F.explode(F.array(*tables)).alias("tb")
-    ).select(id_col, "tb.table_id", "tb.bucket")
-
-
-def lsh_buckets_vectorized(
-    df: DataFrame,
-    dim: int,
-    n_tables: int = 16,
-    n_planes: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, table_id, bucket) via a numpy-vectorized pandas UDF.
-
-    The column-expression variant (``lsh_buckets``) builds a plan that
-    grows with tables x planes x dim — beyond ~32x4x64 codegen compile
-    time dominates.  Here the whole Arrow batch is one (B, dim) @ (dim,
-    T*P) matmul followed by bit-packing, so plan size is constant and the
-    per-batch cost is one BLAS call; same deterministic hyperplanes.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    planes = np.array(
-        [
-            _hyperplane(dim, t, p, seed)
-            for t in range(n_tables)
-            for p in range(n_planes)
-        ],
-        dtype=np.float64,
-    ).T  # (dim, T*P)
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
-
-    @pandas_udf(ArrayType(LongType()))
-    def buckets(embs: "pd.Series") -> "pd.Series":
-        import pandas as pd
-
-        mat = np.stack(embs.to_numpy()).astype(np.float64)  # (B, dim)
-        bits = (mat @ planes) >= 0  # (B, T*P)
-        bits = bits.reshape(len(mat), n_tables, n_planes)
-        packed = (bits * weights).sum(axis=2)  # (B, T)
-        return pd.Series(list(packed))
-
-    b = df.select(F.col(id_col), buckets(F.col(vec_col)).alias("bks"))
-    return b.select(
-        id_col, F.posexplode("bks").alias("table_id", "bucket")
-    )
-
-
-def lsh_bucket_candidates(
-    df: DataFrame,
-    dim: int,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Candidate pairs sharing an LSH bucket in any table (the scale path).
-
-    Bucket join replaces the O(n²) cross join; expected bucket occupancy is
-    n / 2^n_planes per table, so join cost is sum of squared bucket sizes.
-    """
-    b = lsh_buckets(df, dim, n_tables, n_planes, seed, id_col, vec_col)
-    l, r = b.alias("l"), b.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.table_id") == F.col("r.table_id"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
 
 
 def _int_hyperplane(dim: int, table: int, plane: int, seed: int = 42) -> list[int]:
@@ -409,36 +295,6 @@ def input_content_digest(path: str) -> str:
     return h.hexdigest()[:16]
 
 
-def ivf_index(
-    df: DataFrame,
-    n_cells: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """IVF coarse quantizer: KMeans cells over the embedding column.
-
-    Returns (assigned DataFrame with a ``cell`` column, centroids list).
-    Centroids are computed once (seeded, deterministic k-means) and the
-    assignment is a narrow map — at corpus scale the index build is one
-    MLlib job and the assignment column is written alongside the vectors,
-    so queries only scan their probed cells (partition pruning on ``cell``).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feat = df.select(
-        F.col(id_col), F.col(vec_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_cells, seed=seed, initMode="k-means||").fit(feat)
-    assigned = model.transform(feat).select(
-        id_col, vec_col, F.col("prediction").alias("cell")
-    )
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    return assigned, centroids
-
-
 def ivf_materialize(
     df: DataFrame,
     path: str,
@@ -453,8 +309,20 @@ def ivf_materialize(
     partition-prunes to its probed cells' directories) and
     ``path/centroids`` (n_cells tiny rows).  At corpus scale this is the
     one MLlib job per index lifetime; every query afterwards is a pruned
-    scan + top-k, no KMeans in the query plan."""
-    assigned, centroids = ivf_index(df, n_cells, seed, id_col, vec_col)
+    scan + top-k, no KMeans in the query plan.  The coarse quantizer is a
+    seeded (deterministic) k-means; the cell assignment is a narrow map."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feat = df.select(
+        F.col(id_col), F.col(vec_col),
+        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
+    )
+    model = KMeans(k=n_cells, seed=seed, initMode="k-means||").fit(feat)
+    assigned = model.transform(feat).select(
+        id_col, vec_col, F.col("prediction").alias("cell")
+    )
+    centroids = [list(map(float, c)) for c in model.clusterCenters()]
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path + "/vectors")
     spark = df.sparkSession
     spark.createDataFrame(
@@ -506,87 +374,6 @@ def ivf_probe(
     return (
         spark.read.parquet(path + "/vectors")
         .where(F.col("cell").isin(probed))
-        .select(F.col(id_col), cos)
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF approximate top-k: score only vectors in the n_probe cells whose
-    centroids are closest to the query (driver-side math on n_cells
-    centroids — tiny).  This convenience form builds the index inline —
-    small-scale/one-shot use only; repeated queries must use
-    ``ivf_materialize`` + ``ivf_probe`` so the KMeans job runs once."""
-    assigned, centroids = ivf_index(df, n_cells, seed, id_col, vec_col)
-
-    def dist2(a, b):
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    probed = sorted(
-        range(len(centroids)), key=lambda c: (dist2(query_vec, centroids[c]), c)
-    )[:n_probe]
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    cos = F.round(cosine_expr(F.col(vec_col), q), 4).alias("cosine")
-    return (
-        assigned.where(F.col("cell").isin(probed))
-        .select(F.col(id_col), cos)
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ann_topk_lsh(
-    df: DataFrame,
-    query_vec: list[float],
-    dim: int,
-    k: int = 10,
-    n_tables: int = 4,
-    n_planes: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    vectorized: bool = False,
-) -> DataFrame:
-    """Approximate top-k: score only vectors sharing a bucket with the query.
-
-    The query's buckets are computed driver-side (pure Python on one vector)
-    and pushed down as an IN filter — the scan prunes to candidate buckets
-    before any cosine is evaluated.  ``vectorized=True`` computes corpus
-    buckets with the numpy pandas UDF (constant plan size — use for large
-    n_tables x n_planes x dim).
-    """
-    def dot(a: list[float], b: list[float]) -> float:
-        return sum(x * y for x, y in zip(a, b))
-
-    wanted = set()
-    for t in range(n_tables):
-        bucket = 0
-        for p in range(n_planes):
-            if dot(query_vec, _hyperplane(dim, t, p, seed)) >= 0:
-                bucket |= 1 << p
-        wanted.add((t, bucket))
-
-    bucket_fn = lsh_buckets_vectorized if vectorized else lsh_buckets
-    b = bucket_fn(df, dim, n_tables, n_planes, seed, id_col, vec_col)
-    cond = None
-    for t, bk in sorted(wanted):
-        c = (F.col("table_id") == t) & (F.col("bucket") == bk)
-        cond = c if cond is None else (cond | c)
-    cand_ids = b.where(cond).select(id_col).distinct()
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    cos = F.round(cosine_expr(F.col(vec_col), q), 4).alias("cosine")
-    return (
-        df.join(cand_ids, id_col)
         .select(F.col(id_col), cos)
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)

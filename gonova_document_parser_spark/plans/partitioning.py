@@ -20,8 +20,6 @@ Policy:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -32,9 +30,7 @@ from pyspark.sql import functions as F
 # is ~constant, so the breakeven sits around 3-4x that size — 1 MB keeps
 # a margin on both sides (skip up to ~4x bench scale, spread beyond).
 # A real corpus scan is TBs and always spreads (or is already split).
-EXPR_FANOUT_MIN_BYTES = int(
-    os.environ.get("GONOVA_FANOUT_MIN_BYTES", str(1024 * 1024))
-)
+EXPR_FANOUT_MIN_BYTES = 1024 * 1024
 
 
 def host_of(url_col="url"):
@@ -68,13 +64,9 @@ def plan_extraction_partitions(
     return spread_by_url(df, min(waves * default_parallelism, max_partitions))
 
 
-def fan_out(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    min_bytes: int | None = None,
-) -> DataFrame:
-    """Ensure at least ``min_partitions`` (default: defaultParallelism)
-    before a per-row EXPANSION operator (explode, shingle, tokenize).
+def fan_out(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
+    """Ensure at least defaultParallelism partitions before a per-row
+    EXPANSION operator (explode, shingle, tokenize).
 
     Scans of small/compacted inputs can carry fewer tasks than cores; the
     expansion multiplies rows AFTER the scan, so the cheap fix is one
@@ -94,10 +86,10 @@ def fan_out(
     exactly as before.  Callers whose per-row work is Python/Arrow (orders
     of magnitude above JVM expressions per byte) keep ``min_bytes=None`` —
     they need the spread even for tiny inputs.  ``EXPR_FANOUT_MIN_BYTES``
-    is the shared default for JVM-expression call sites, tunable via
-    ``GONOVA_FANOUT_MIN_BYTES`` (set 0 to restore unconditional spreading).
+    is the shared threshold for JVM-expression call sites; call sites that
+    must always spread pass ``min_bytes=0`` (or omit it).
     """
-    want = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    want = df.sparkSession.sparkContext.defaultParallelism
     if min_bytes is not None and min_bytes > 0:
         est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
         if est < min_bytes:

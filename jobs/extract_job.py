@@ -3,21 +3,19 @@
 Usage:
   spark-submit --py-files gonova.zip jobs/extract_job.py \
       <pages_parquet_or_table> <output_path> <checkpoint_path> \
-      [run_id] [n_partitions] [n_waves] [--verify] [--stage-source] \
-      [--digests] [--bucketed-table NAME]
+      [run_id] [n_partitions] [n_waves] [--verify] [--digests] \
+      [--bucketed-table NAME]
 
 ``n_waves`` sets commit granularity (fewer waves = faster, larger at-risk
 window on a kill) on a fixed wave grid: wave g commits partition ids
 ``[g*s, (g+1)*s)`` with ``s = ceil(n_partitions / n_waves)``, and a
 resume runs only the grid waves that still hold unfinished ids, at their
 original width (killed after wave 1 of 2, the re-run commits one wave;
-its progress lines count waves from 1 again); ``--verify`` re-reads each written wave and asserts the
-observed metrics match (audit mode, 2x read cost); ``--stage-source``
-writes the partition_id-augmented source once so each wave's scan
-file-prunes instead of re-reading the full input (pays off as n_waves
-grows or when the source is remote); ``--digests`` commits the 16-byte
-md5 url-digest sidecar per wave (what run_incremental's digest-table
-mode rides on); ``--bucketed-table NAME`` stages the corpus ONCE as a
+its progress lines count waves from 1 again); ``--verify`` re-reads each
+written wave and asserts the observed metrics match (audit mode, 2x read
+cost); ``--digests`` commits the 16-byte md5 url-digest sidecar per wave
+(what run_incremental's digest-table mode rides on); ``--bucketed-table
+NAME`` stages the corpus ONCE as a
 managed table bucketed on partition_id — wave scans then bucket-prune
 with no per-run staging copy (BENCH §1b round-4; the Iceberg
 ``bucket(N, url)`` production shape) — an existing table with matching
@@ -42,14 +40,13 @@ from gonova_document_parser_spark.sources import read_pages
 
 def main(argv: list[str]) -> None:
     verify = "--verify" in argv
-    stage = "--stage-source" in argv
     digests = "--digests" in argv
     bucketed = None
     if "--bucketed-table" in argv:
         i = argv.index("--bucketed-table")
         bucketed = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
-    argv = [a for a in argv if a not in ("--verify", "--stage-source", "--digests")]
+    argv = [a for a in argv if a not in ("--verify", "--digests")]
     source, output, ckpt = argv[0], argv[1], argv[2]
     run_id = argv[3] if len(argv) > 3 else "run-default"
     n_partitions = int(argv[4]) if len(argv) > 4 else 64
@@ -113,7 +110,6 @@ def main(argv: list[str]) -> None:
         input_snapshot=source,
         n_waves=n_waves,
         verify_readback=verify,
-        stage_source=stage,
         digest_path=f"{output}/_url_digests" if digests else None,
         # live per-wave progress (Q5): one JSON line per commit
         on_progress=lambda p: print(json.dumps({"progress": p}), flush=True),

@@ -337,7 +337,7 @@ def test_bucketed_table_wave_pruning(spark, paths):
     """BENCH §1b production shape (VERDICT r3 #8): the corpus written ONCE
     as a managed table bucketed on partition_id makes each wave's
     partition_id IN (...) filter compile to bucket pruning — the scan
-    reads only the wave's buckets, no --stage-source copy — and the
+    reads only the wave's buckets, no per-run staging copy — and the
     checkpointed run off the table is url/text-identical to the plain
     parquet run."""
     import re
@@ -395,41 +395,6 @@ def test_read_fallback_scoped_to_missing_path(spark, paths):
     pages = generate_pages(spark, 10, num_partitions=1)
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA|Unable to infer"):
         run_incremental(spark, pages, out, ckpt, n_partitions=2, n_waves=1)
-
-
-def test_stage_source_run_and_resume(spark, paths, tmp_path):
-    """stage_source=True: waves run off a partition_id-partitioned staging
-    copy (file-pruned scans), byte-identical output, and resume restages
-    only the todo partitions."""
-    out, ckpt = paths
-    pages = generate_pages(spark, N_DOCS, num_partitions=4)
-    s1 = run_with_checkpoint(
-        spark, pages, out, ckpt, run_id="rs", n_partitions=N_PARTS, n_waves=4,
-        stage_source=True,
-    )
-    assert s1["n_docs"] == N_DOCS
-    import os
-
-    staged = f"{out}/_staged_source"
-    assert len([d for d in os.listdir(staged) if d.startswith("partition_id=")]) == N_PARTS
-    result = spark.read.parquet(out)
-    assert result.count() == N_DOCS
-    assert result.select("url").distinct().count() == N_DOCS
-
-    # crash simulation: lose partitions >= 4; resume restages ONLY those
-    kept = spark.read.parquet(ckpt).where(F.col("partition_id") < 4)
-    ckpt2 = str(tmp_path / "ckpt2")
-    kept.write.parquet(ckpt2)
-    for pid in range(4, N_PARTS):
-        shutil.rmtree(f"{out}/partition_id={pid}")
-    s2 = run_with_checkpoint(
-        spark, pages, out, ckpt2, run_id="rs", n_partitions=N_PARTS, n_waves=4,
-        stage_source=True,
-    )
-    assert s2["partitions_done_before"] == 4
-    result = spark.read.parquet(out)
-    assert result.count() == N_DOCS
-    assert result.select("url").distinct().count() == N_DOCS
 
 
 class _Killed(Exception):

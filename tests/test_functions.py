@@ -9,12 +9,7 @@ from gonova_document_parser_spark.functions.dedup import (
     ngram_jaccard_pairs,
     simhash64,
 )
-from gonova_document_parser_spark.functions.similarity import (
-    ann_topk_lsh,
-    brute_force_topk,
-    lsh_bucket_candidates,
-    pairwise_cosine_neardups,
-)
+from gonova_document_parser_spark.functions.similarity import brute_force_topk
 from gonova_document_parser_spark.functions.textstats import (
     lang_id_expr,
     token_count_expr,
@@ -184,55 +179,29 @@ def test_brute_force_topk(emb):
     assert top[0]["cosine"] == 1.0
 
 
-def test_pairwise_neardups(emb):
-    pairs = {(r["id_a"], r["id_b"]) for r in pairwise_cosine_neardups(emb, 0.99).collect()}
-    assert pairs == {(0, 1)}
-
-
-def test_lsh_candidates_contain_near_dup_and_ann_finds_top1(emb):
-    cands = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_bucket_candidates(emb, dim=3, n_tables=8, n_planes=4).collect()
-    }
-    assert (0, 1) in cands
-    top = ann_topk_lsh(emb, [1.0, 0.0, 0.0], dim=3, k=2, n_tables=8, n_planes=4).collect()
-    assert top[0]["vec_id"] == 0
-
-
-def test_lsh_vectorized_buckets_match_expression_path(spark, emb):
+def test_ivf_topk_finds_exact_top1(spark, tmp_path):
     from gonova_document_parser_spark.functions.similarity import (
-        lsh_buckets,
-        lsh_buckets_vectorized,
+        ivf_materialize,
+        ivf_probe,
     )
-
-    a = {(r["vec_id"], r["table_id"]): r["bucket"] for r in lsh_buckets(emb, 3, 4, 6).collect()}
-    b = {
-        (r["vec_id"], r["table_id"]): r["bucket"]
-        for r in lsh_buckets_vectorized(emb, 3, 4, 6).collect()
-    }
-    assert a == b and len(a) == 20
-
-
-def test_ivf_topk_finds_exact_top1(spark):
-    from gonova_document_parser_spark.functions.similarity import ivf_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = [float(v) for v in emb.where("vec_id = 0").collect()[0]["embedding"]]
-    top = ivf_topk(emb, q, k=5, n_cells=8, n_probe=3).collect()
+    ivf_materialize(emb, str(tmp_path / "a"), n_cells=8)
+    top = ivf_probe(spark, str(tmp_path / "a"), q, k=5, n_probe=3).collect()
     assert top[0]["vec_id"] == 0 and top[0]["cosine"] == 1.0
-    # deterministic across runs (seeded kmeans)
-    again = ivf_topk(emb, q, k=5, n_cells=8, n_probe=3).collect()
+    # deterministic across builds (seeded kmeans)
+    ivf_materialize(emb, str(tmp_path / "b"), n_cells=8)
+    again = ivf_probe(spark, str(tmp_path / "b"), q, k=5, n_probe=3).collect()
     assert [r["vec_id"] for r in top] == [r["vec_id"] for r in again]
 
 
 def test_ivf_materialize_probe(spark, tmp_path):
     """Materialize-once + probe (VERDICT r1 #4): the per-query plan has no
-    KMeans fit, matches the inline path's results, and the scan partition-
-    prunes to the n_probe probed cells."""
+    KMeans fit and the scan partition-prunes to the n_probe probed cells."""
     from gonova_document_parser_spark.functions.similarity import (
         ivf_materialize,
         ivf_probe,
-        ivf_topk,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -241,9 +210,6 @@ def test_ivf_materialize_probe(spark, tmp_path):
     ivf_materialize(emb, path, n_cells=8)
     probe = ivf_probe(spark, path, q, k=5, n_probe=3)
     got = probe.collect()
-    # same answer as the inline convenience form (same seed, same kmeans)
-    inline = ivf_topk(emb, q, k=5, n_cells=8, n_probe=3).collect()
-    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in inline]
     assert got[0]["vec_id"] == 0 and got[0]["cosine"] == 1.0
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "KMeans" not in plan
@@ -1149,11 +1115,32 @@ def test_connected_components_matches_union_find_on_random_graph(spark):
     got = {r["id"]: r["cluster_id"] for r in connected_components(df).collect()}
     assert got == expect
     # large-star/small-star must produce the identical labeling
-    star = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(df, algorithm="star").collect()
-    }
+    from gonova_document_parser_spark.functions.dedup import _cc_large_small_star
+
+    star = {r["id"]: r["cluster_id"] for r in _cc_large_small_star(df)[0].collect()}
     assert star == expect
+
+
+def test_connected_components_long_path_past_max_iter(spark):
+    """A 30-node path needs 29 label-propagation rounds; with the default
+    max_iter=20 the labels are still changing, so the result must come
+    from the large-star/small-star fallback — one cluster labelled 0 —
+    never the unconverged labels (node 29 labelled 9)."""
+    from gonova_document_parser_spark.functions.dedup import (
+        connected_components,
+        dedup_clusters,
+    )
+
+    n = 30
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    got = {r["id"]: r["cluster_id"] for r in connected_components(df).collect()}
+    assert got == {i: 0 for i in range(n)}
+    out = dedup_clusters(df).collect()
+    assert len(out) == n
+    assert {(r["cluster_id"], r["cluster_size"]) for r in out} == {(0, n)}
+    assert [r["doc_id"] for r in out if r["is_keeper"]] == [0]
 
 
 def test_connected_components_string_ids_converge(spark):

@@ -156,3 +156,33 @@ def test_fan_out_size_adaptive(spark, pages_parquet):
         uncond.rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
+
+
+def test_package_reads_no_env_knobs_outside_session():
+    """One partitioning policy, not env knobs: no package module reads the
+    environment except session.py, which holds deployment settings (master,
+    driver memory).  A tuning threshold belongs in a module constant next
+    to the code that uses it."""
+    import ast
+    import pathlib
+
+    import gonova_document_parser_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    env_names = {"environ", "environb", "getenv", "getenvb"}
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path.relative_to(root).as_posix() == "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            name = (
+                node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name)
+                else None
+            )
+            imported = isinstance(node, ast.ImportFrom) and any(
+                a.name in env_names for a in node.names
+            )
+            if name in env_names or imported:
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert offenders == []
