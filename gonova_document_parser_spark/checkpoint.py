@@ -16,7 +16,9 @@ Resume = a filter of the corpus to the partition ids with no completed
 row, wave by wave on a fixed grid: only unfinished partitions are re-read
 and re-extracted.  Crash windows: die during (1) -> no checkpoint row,
 partition re-runs, overwrite is idempotent; die between (1) and (2) ->
-same.  Exactly-once output, no coordination service.
+same (``run_incremental`` first removes such dirs, see
+``reconcile_orphan_partitions``).  Exactly-once output, no coordination
+service.
 
 ``partition_id = pmod(xxhash64(url), n_partitions)`` is a pure function of
 the row, so lineage is stable across cluster sizes and retries (the same
@@ -50,14 +52,23 @@ def partitioned(pages: DataFrame, n_partitions: int) -> DataFrame:
     )
 
 
-def url_digest_expr(col: str = "url") -> F.Column:
-    """128-bit content key for the seen-url sidecar: ``unhex(md5(url))``.
+def content_digest(df: DataFrame, *cols) -> tuple[int, int]:
+    """(row count, order-independent multiset digest of ``xxhash64(*cols)``).
 
-    16 bytes/url keeps the sidecar tiny while making birthday collisions
-    statistically impossible at any corpus size (2^64 urls for a 50% chance
-    of ONE collision) — a 64-bit key would silently drop colliding new urls
-    at the 10^12-row scale this mode targets (ADVICE r2)."""
-    return F.unhex(F.md5(col))
+    The digest is a SUM of the per-row 64-bit hash in decimal(38,0): it
+    never overflows, and unlike XOR it does not cancel pairs — with XOR a
+    url present twice (a legal re-crawl) contributes nothing, so two
+    deltas of repeated urls digest alike and the second is skipped as
+    already done.  Hashing several columns jointly keys the per-row
+    pairing (two rows swapping their contents change the digest)."""
+    agg = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
+        ).alias("h"),
+    ).collect()[0]
+    return agg["n"], int(agg["h"])
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:
@@ -153,17 +164,18 @@ def reconcile_orphan_partitions(
 ) -> int:
     """Delete delta partition dirs that lack a completed checkpoint row.
 
-    Closes the digest-mode crash window (ADVICE r3): the per-wave commit
-    order is data -> digests -> checkpoint row, so a kill between a
-    wave's data write and its digest write leaves extracted rows under
-    ``delta=S1`` with NO digests.  If the crawl input grows before the
-    retry, the digest anti-join treats those urls as new, the delta's
-    content snapshot changes to S2, and the urls are re-extracted under
-    ``delta=S2`` — while the orphaned ``delta=S1`` dirs remain, so
-    whole-output reads would return them twice.  Reconciling first
-    restores the invariant "every surviving partition dir has a
-    completed checkpoint row (and therefore its digests)"; the orphaned
-    urls simply rejoin the new delta.
+    A wave commits its data, then its checkpoint row.  A kill between
+    the two (or during the data commit's per-partition renames) leaves
+    extracted rows under ``delta=S1`` with no lineage row.
+    ``run_incremental``'s anti-join against the output would count those
+    urls as seen, and its retry digests a new delta S2 from what is
+    unseen, so nothing would ever resume S1 or give them a checkpoint
+    row.  Reconciling first restores the invariant "every surviving partition dir has a
+    completed checkpoint row"; the orphaned urls simply rejoin the new
+    delta and extract exactly once.  A delta dir left with no partition
+    dir goes too, and the output root if that empties it: a first wave
+    killed before its commit leaves only a ``.spark-staging-*`` dir, and
+    the retry is then a first run rather than a failed read.
 
     Safe on every layout: only ``delta=*/partition_id=*`` dirs are
     touched (the incremental layout; direct ``run_with_checkpoint``
@@ -176,8 +188,7 @@ def reconcile_orphan_partitions(
 
     Returns the number of partition dirs removed.
     """
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(output_path)
+    root = spark._jvm.org.apache.hadoop.fs.Path(output_path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(root):
         return 0
@@ -191,8 +202,14 @@ def reconcile_orphan_partitions(
             .distinct()
             .collect()
         }
+
+    def _dataless(p):  # only _SUCCESS/hidden markers (.spark-staging-*)
+        return all(
+            s.getPath().getName().startswith(("_", ".")) for s in fs.listStatus(p)
+        )
+
     removed = 0
-    digest_root = jvm.org.apache.hadoop.fs.Path(f"{output_path}/_url_digests")
+    swept = False
     for st in fs.listStatus(root):
         name = st.getPath().getName()
         if not (st.isDirectory() and name.startswith("delta=")):
@@ -209,62 +226,21 @@ def reconcile_orphan_partitions(
             if (run_id, pid) in completed:
                 continue
             fs.delete(pst.getPath(), True)
-            dig = jvm.org.apache.hadoop.fs.Path(
-                f"{output_path}/_url_digests/{name}/{pname}"
-            )
-            if fs.exists(dig):
-                fs.delete(dig, True)
             removed += 1
             _LOG.warning(
                 "reconcile: removed orphan partition dir %s/%s "
                 "(no completed checkpoint row)", name, pname,
             )
-    # digest dirs can also outlive their data (kill during a re-run's data
-    # overwrite after digests existed): drop digest partitions with no
-    # completed row too, so the anti-join can't hide urls whose data is gone
-    if fs.exists(digest_root):
-        for st in fs.listStatus(digest_root):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("delta=")):
-                continue
-            run_id = name[len("delta=") :]
-            for pst in fs.listStatus(st.getPath()):
-                pname = pst.getPath().getName()
-                if not (pst.isDirectory() and pname.startswith("partition_id=")):
-                    continue
-                try:
-                    pid = int(pname.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if (run_id, pid) not in completed:
-                    fs.delete(pst.getPath(), True)
-                    removed += 1
-                    _LOG.warning(
-                        "reconcile: removed orphan digest dir %s/%s", name, pname
-                    )
-    if removed:
-        # drop now-dataless delta dirs (only _SUCCESS/hidden markers left):
-        # an all-dirs-no-files tree would fail parquet schema inference on
-        # the next read (which is deliberately NOT treated as "first run" —
-        # see _read_parquet_if_exists)
-        def _dataless(p):
-            return all(
-                s.getPath().getName().startswith(("_", "."))
-                for s in fs.listStatus(p)
-            )
-
-        for parent in (digest_root, root):
-            if not fs.exists(parent):
-                continue
-            for st in fs.listStatus(parent):
-                if (
-                    st.isDirectory()
-                    and st.getPath().getName().startswith("delta=")
-                    and _dataless(st.getPath())
-                ):
-                    fs.delete(st.getPath(), True)
-            if parent is digest_root and len(fs.listStatus(parent)) == 0:
-                fs.delete(parent, True)
+        # a delta dir left with no partition dir (emptied above, or its
+        # first wave killed before the commit moved any into place) would
+        # fail parquet schema inference on the next read, which is
+        # deliberately NOT treated as "first run" (see
+        # _read_parquet_if_exists): drop it, and the root if that empties it
+        if _dataless(st.getPath()):
+            fs.delete(st.getPath(), True)
+            swept = True
+    if swept and _dataless(root):
+        fs.delete(root, True)
     return removed
 
 
@@ -275,7 +251,6 @@ def run_incremental(
     checkpoint_path: str,
     n_partitions: int = 64,
     n_waves: int = 4,
-    use_digest_table: bool = False,
 ) -> dict:
     """Process only urls not yet present in the output (growing corpus).
 
@@ -284,53 +259,29 @@ def run_incremental(
     it under a snapshot-derived run_id, so within one delta the wave-level
     kill/resume semantics of ``run_with_checkpoint`` still apply.
 
-    Scale: the anti-join keys on url only (both sides pruned to one
-    column) and Spark's runtime bloom-filter join (session default: on)
-    prunes the shuffle.  ``use_digest_table=True`` goes further: the seen
-    set is a 16-byte-per-url (md5) ``_url_digests`` sidecar, so incremental
-    runs never rescan the (text-heavy) output at all — the anti-join reads
-    digests only.  Digests commit PER WAVE inside ``run_with_checkpoint``,
-    ordered data -> digests -> checkpoint rows, all idempotent dynamic
-    partition overwrites: a partition marked completed always has its
-    digests, so even if the crawl input GROWS between a crash and the
-    retry (new snapshot id), committed urls anti-join out and are never
-    re-extracted into the new delta (ADVICE r2).  Before the anti-join,
-    ``reconcile_orphan_partitions`` removes any partition dir whose wave
-    died between its data commit and its checkpoint row (data present,
-    digests and/or checkpoint row lost): those urls rejoin the delta and
-    extract exactly once — without reconcile a grown input would compute
-    a new snapshot and re-extract them beside the orphaned copy
-    (ADVICE r3).
-    """
-    digest_path = f"{output_path}/_url_digests"
-    if use_digest_table:
-        reconcile_orphan_partitions(spark, output_path, checkpoint_path)
-        seen_keys = _read_parquet_if_exists(spark, digest_path)
-        if seen_keys is None:  # first run: no digests yet
-            new_pages = pages
-        else:
-            new_pages = pages.join(
-                seen_keys.select("url_digest"),
-                url_digest_expr(pages["url"]) == seen_keys["url_digest"],
-                "left_anti",
-            )
-    else:
-        seen = _read_parquet_if_exists(spark, output_path)
-        new_pages = (
-            pages if seen is None else pages.join(seen.select("url"), "url", "left_anti")
-        )
+    The output's ``url`` column is the one seen-set: the anti-join reads
+    it column-pruned from parquet, and Spark's runtime bloom-filter join
+    (session default: on) prunes the shuffle.  Each wave commits data,
+    then its checkpoint row, so a kill can leave a partition dir whose
+    urls the anti-join would treat as seen while no lineage row records
+    them.  ``reconcile_orphan_partitions`` therefore runs first, on every
+    call: it removes those dirs, their urls rejoin the delta, and they
+    extract exactly once, even when the crawl input grew between the kill
+    and the retry (a new snapshot id, so the killed delta never resumes).
 
-    # snapshot id from the delta's content: stable across retries of the
-    # same delta, different for a different delta
-    # bit_xor: associative, commutative, overflow-free -> order-independent
-    # content digest of the delta's url set
-    agg = new_pages.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("url")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    if agg["n"] == 0:
+    The snapshot id is ``content_digest`` of the delta's urls: stable
+    across retries of the same delta, different for a different one, and
+    a delta of repeated urls does not collide with another.
+    """
+    reconcile_orphan_partitions(spark, output_path, checkpoint_path)
+    seen = _read_parquet_if_exists(spark, output_path)
+    new_pages = (
+        pages if seen is None else pages.join(seen.select("url"), "url", "left_anti")
+    )
+    n, h = content_digest(new_pages, "url")
+    if n == 0:
         return {"run_id": None, "n_new": 0}
-    snap = f"delta-{agg['n']}-{agg['h'] & 0xFFFFFFFFFFFF:x}"
+    snap = f"delta-{n}-{h & 0xFFFFFFFFFFFF:x}"
     # each delta gets its own partition directory: the wave-level dynamic
     # partition overwrite then only ever replaces dirs of THIS delta —
     # prior deltas' data can't be clobbered, and whole-output reads pick
@@ -344,9 +295,8 @@ def run_incremental(
         n_partitions=n_partitions,
         input_snapshot=snap,
         n_waves=n_waves,
-        digest_path=f"{digest_path}/delta={snap}" if use_digest_table else None,
     )
-    summary["n_new"] = agg["n"]
+    summary["n_new"] = n
     return summary
 
 
@@ -473,7 +423,6 @@ def run_with_checkpoint(
     n_waves: int = 4,
     verify_readback: bool = False,
     on_progress=None,
-    digest_path: str | None = None,
 ) -> dict:
     """Extract ``pages`` into ``output_path`` with exact resume.
 
@@ -505,13 +454,6 @@ def run_with_checkpoint(
     volume, off by default).  Every wave partition id gets a checkpoint
     row, including zero-document partitions — otherwise dynamic overwrite
     writes no directory for them and resume would re-run them forever.
-
-    ``digest_path``: when set (the digest-table incremental mode), each
-    wave also commits its urls' 16-byte md5 digests, partitioned by
-    partition_id, BETWEEN the data write and the checkpoint-row write.
-    All three stores are idempotent dynamic partition overwrites, so the
-    ordering guarantees a partition marked completed always has both its
-    data and its digests — a crash can at worst re-run one wave in place.
 
     Every wave re-scans the source and filters it to its partition ids.
     For a source where that scan should prune to the wave's own files,
@@ -580,21 +522,6 @@ def run_with_checkpoint(
             .parquet(output_path)
         )
         got = obs.get  # blocks until the write action finished
-        if digest_path is not None:
-            # digests commit AFTER the wave's data, BEFORE its checkpoint
-            # row: completed => digested.  Narrow url-only scan (column-
-            # pruned; bucket-pruned on a stage_bucketed_table source),
-            # idempotent dynamic overwrite per partition dir — a re-run wave
-            # rewrites its digests in place, never duplicates them.  The
-            # exchange gives each digest dir one file, as extract_wave does
-            # for data.
-            (
-                wave.select("partition_id", url_digest_expr("url").alias("url_digest"))
-                .repartition(len(wave_ids), F.col("partition_id"))
-                .write.partitionBy("partition_id")
-                .mode("overwrite")
-                .parquet(digest_path)
-            )
         finished = _now()
         ckpt_rows = []  # one row per wave pid, zero-doc partitions included
         for pid in wave_ids:

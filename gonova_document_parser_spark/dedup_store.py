@@ -16,11 +16,11 @@ Store layout under ``store_path``::
     verdicts/delta=<snap>/   the delta's per-doc verdicts:
                              (id, dup_of_store, dup_in_delta, keep)
 
-``<snap>`` is a content digest of the delta (row count + an
-order-independent sum of the joint ``xxhash64(id, md5(text))`` — SUM,
-not XOR: xor over a multiset cancels pairs, see jobs/extract_job.py),
-so retrying the same delta targets the SAME directories and a different
-delta can never collide with a committed one.
+``<snap>`` is a content digest of the delta (``checkpoint.content_digest``:
+row count + an order-independent SUM of the joint
+``xxhash64(id, md5(text))`` — not XOR, which cancels pairs over a
+multiset), so retrying the same delta targets the SAME directories and a
+different delta can never collide with a committed one.
 
 Commit protocol (per delta, in this order):
 
@@ -57,6 +57,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .checkpoint import content_digest
 from .functions.dedup import incremental_minhash_dedup, minhash_bands
 
 
@@ -171,18 +172,8 @@ def delta_snapshot_id(docs: DataFrame, id_col: str, text_col: str):
     """(snap, n_rows): content digest of the delta.  Stable across retries
     of the same input, distinct for different content; the joint-hash SUM
     keys per-row (id, text) pairing (xor would cancel swapped pairs)."""
-    agg = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(
-                F.xxhash64(F.col(id_col), F.md5(F.col(text_col))).cast(
-                    "decimal(38,0)"
-                )
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("h"),
-    ).collect()[0]
-    return f"delta-{agg['n']}-{int(agg['h']) & 0xFFFFFFFFFFFFFF:x}", agg["n"]
+    n, h = content_digest(docs, F.col(id_col), F.md5(F.col(text_col)))
+    return f"delta-{n}-{h & 0xFFFFFFFFFFFFFF:x}", n
 
 
 def run_delta_dedup(

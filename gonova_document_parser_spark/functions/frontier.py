@@ -101,9 +101,8 @@ def frontier_probe(
     the broadcast budget (the module's own sizing math puts a 10^10-url
     filter at ~12 GB — over Spark's 8 GB broadcast-relation cap): a
     plain shuffle equi-join on ``word_idx`` (a tiny int64 key), same
-    output (path agreement pinned in tests, the
-    ``rare_word_stats(broadcast_hot=)`` pattern).  Keep the default up
-    to a few hundred MB of filter words.
+    output (path agreement pinned in tests).  Keep the default up to a
+    few hundred MB of filter words.
     """
     c = F.col(url_col)
     probes = candidates.select(

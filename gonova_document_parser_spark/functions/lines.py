@@ -33,7 +33,6 @@ def line_dedup(
     max_docs: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_hot: bool = True,
 ) -> DataFrame:
     """Drop every line that appears in more than ``max_docs`` distinct docs.
 
@@ -44,9 +43,8 @@ def line_dedup(
     CRLF input dedups against LF input with identical content and the
     reassembled text is LF-normalized (real crawl text mixes both).
 
-    ``broadcast_hot=True`` broadcasts the hot-line table (boilerplate sets
-    are small even at web scale); set False to fall back to a shuffle join
-    if a pathological corpus produces a huge hot set.
+    The hot-line table is broadcast: boilerplate sets are small even at
+    web scale.
     """
     lines = fan_out(
         df.select(F.col(id_col), F.col(text_col)),
@@ -68,9 +66,7 @@ def line_dedup(
         .where(F.col("n_docs") > max_docs)
         .select("lh", F.lit(1).alias("is_hot"))
     )
-    if broadcast_hot:
-        hot = F.broadcast(hot)
-    flagged = lines.join(hot, "lh", "left").select(
+    flagged = lines.join(F.broadcast(hot), "lh", "left").select(
         F.col(id_col),
         "pos",
         "line",

@@ -117,9 +117,8 @@ def lm_score(
     ``broadcast_model=False`` is the at-scale fallback the module header
     promises (CCNet's models are a few GB — beyond the 8 GB broadcast
     ceiling and any sane driver heap): plain shuffle equi-joins on the
-    token keys, same output (path agreement pinned in tests, the
-    ``rare_word_stats(broadcast_hot=)`` pattern).  Keep the default for
-    models up to a few hundred MB.
+    token keys, same output (path agreement pinned in tests).  Keep the
+    default for models up to a few hundred MB.
     """
     bg = doc_bigrams(docs, id_col, text_col)
     uni1 = unigrams.select(F.col("w").alias("_u1"), F.col("c").alias("c1"))

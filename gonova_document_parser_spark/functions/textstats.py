@@ -228,7 +228,6 @@ def rare_word_stats(
     max_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_hot: bool = True,
 ):
     """Per-doc rare-word ratio — the OOV/noisiness quality signal.
 
@@ -242,9 +241,7 @@ def rare_word_stats(
     means the COMMON vocabulary (count > max_count) is the small side —
     it covers most occurrences but few types — so it broadcasts and
     rarity is a broadcast left-join miss; the corpus-wide token count is
-    ONE map-side-combined groupBy.  ``broadcast_hot=False`` falls back
-    to a shuffle join for corpora whose common vocab outgrows the
-    broadcast budget.
+    ONE map-side-combined groupBy.
     """
     from pyspark.sql import functions as F
 
@@ -262,9 +259,7 @@ def rare_word_stats(
         .where(F.col("_n") > max_count)
         .select("tok", F.lit(True).alias("_common"))
     )
-    if broadcast_hot:
-        hot = F.broadcast(hot)
-    flagged = toks.join(hot, "tok", "left")
+    flagged = toks.join(F.broadcast(hot), "tok", "left")
     return (
         flagged.groupBy(id_col)
         .agg(

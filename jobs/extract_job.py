@@ -3,8 +3,7 @@
 Usage:
   spark-submit --py-files gonova.zip jobs/extract_job.py \
       <pages_parquet_or_table> <output_path> <checkpoint_path> \
-      [run_id] [n_partitions] [n_waves] [--verify] [--digests] \
-      [--bucketed-table NAME]
+      [run_id] [n_partitions] [n_waves] [--verify] [--bucketed-table NAME]
 
 ``n_waves`` sets commit granularity (fewer waves = faster, larger at-risk
 window on a kill) on a fixed wave grid: wave g commits partition ids
@@ -13,9 +12,7 @@ resume runs only the grid waves that still hold unfinished ids, at their
 original width (killed after wave 1 of 2, the re-run commits one wave;
 its progress lines count waves from 1 again); ``--verify`` re-reads each
 written wave and asserts the observed metrics match (audit mode, 2x read
-cost); ``--digests`` commits the 16-byte md5 url-digest sidecar per wave
-(what run_incremental's digest-table mode rides on); ``--bucketed-table
-NAME`` stages the corpus ONCE as a
+cost); ``--bucketed-table NAME`` stages the corpus ONCE as a
 managed table bucketed on partition_id — wave scans then bucket-prune
 with no per-run staging copy (BENCH §1b round-4; the Iceberg
 ``bucket(N, url)`` production shape) — an existing table with matching
@@ -30,7 +27,10 @@ from __future__ import annotations
 import json
 import sys
 
+from pyspark.sql import functions as F
+
 from gonova_document_parser_spark.checkpoint import (
+    content_digest,
     run_with_checkpoint,
     stage_bucketed_table,
 )
@@ -40,13 +40,12 @@ from gonova_document_parser_spark.sources import read_pages
 
 def main(argv: list[str]) -> None:
     verify = "--verify" in argv
-    digests = "--digests" in argv
     bucketed = None
     if "--bucketed-table" in argv:
         i = argv.index("--bucketed-table")
         bucketed = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
-    argv = [a for a in argv if a not in ("--verify", "--digests")]
+    argv = [a for a in argv if a != "--verify"]
     source, output, ckpt = argv[0], argv[1], argv[2]
     run_id = argv[3] if len(argv) > 3 else "run-default"
     n_partitions = int(argv[4]) if len(argv) > 4 else 64
@@ -57,39 +56,22 @@ def main(argv: list[str]) -> None:
     if bucketed is not None:
         # reuse an existing staged table (resume path: the local catalog
         # may have forgotten it — restage when absent or stale).  The
-        # staleness witness is an order-independent multiset digest of the
-        # JOINT (url, content) hash, NOT a row count (a re-crawl that
-        # refetches the same url set with new bytes keeps the count) and
-        # NOT a pair of per-column XORs (xor over a multiset cancels
-        # pairs: two urls swapping each other's previous html, or dup
-        # rows added in pairs, would collide).  SUM of a bit-mixed 64-bit
-        # hash in decimal(38,0) never overflows and keys per-row pairing.
-        def _url_digest(df):
-            from pyspark.sql import functions as F
-
-            return df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(
-                        F.xxhash64("url", F.md5("html")).cast("decimal(38,0)")
-                    ),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("h"),
-            ).collect()[0]
-
+        # staleness witness is content_digest of the JOINT (url, content)
+        # hash, NOT a row count (a re-crawl that refetches the same url
+        # set with new bytes keeps the count) and NOT a pair of per-column
+        # digests (two urls swapping each other's previous html would
+        # collide).
         reuse = False
         if spark.catalog.tableExists(bucketed):
-            from pyspark.sql import functions as F
-
             t = spark.table(bucketed)
-            a, b = _url_digest(t), _url_digest(pages)
+            key = ("url", F.md5("html"))
             # partition-range check: a table staged with MORE partitions
             # than this run's n_partitions would make run_with_checkpoint
             # (which trusts the stored partition_id) silently skip every
             # row with partition_id >= n_partitions
             max_pid = t.agg(F.max("partition_id")).collect()[0][0]
             reuse = (
-                (a["n"], a["h"]) == (b["n"], b["h"])
+                content_digest(t, *key) == content_digest(pages, *key)
                 and max_pid is not None
                 and max_pid < n_partitions
             )
@@ -110,7 +92,6 @@ def main(argv: list[str]) -> None:
         input_snapshot=source,
         n_waves=n_waves,
         verify_readback=verify,
-        digest_path=f"{output}/_url_digests" if digests else None,
         # live per-wave progress (Q5): one JSON line per commit
         on_progress=lambda p: print(json.dumps({"progress": p}), flush=True),
     )

@@ -188,132 +188,131 @@ def test_per_wave_progress_hook(spark, paths):
     assert all(p["docs_per_sec"] > 0 for p in seen)
 
 
-def test_incremental_digest_table_mode(spark, paths):
-    """Digest-table incremental: second run's anti-join reads the 16-byte
-    md5 _url_digests sidecar (never rescans the text-heavy output) and
-    still extracts exactly the delta, exactly once."""
+def _assert_every_partition_dir_has_completed_row(spark, out, ckpt):
+    """Lineage invariant of the incremental layout: every surviving
+    delta=*/partition_id=* dir has a completed checkpoint row."""
     import os
 
-    from gonova_document_parser_spark.checkpoint import run_incremental
-
-    out, ckpt = paths
-    first = generate_pages(spark, 50, num_partitions=2)
-    s1 = run_incremental(
-        spark, first, out, ckpt, n_partitions=4, n_waves=2, use_digest_table=True
-    )
-    assert s1["n_new"] == 50
-    assert os.path.isdir(f"{out}/_url_digests")
-    # digest sidecar is invisible to whole-output reads (underscore dir)
-    assert spark.read.parquet(out).count() == 50
-
-    grown = generate_pages(spark, 80, num_partitions=2)  # 50 old + 30 new
-    s2 = run_incremental(
-        spark, grown, out, ckpt, n_partitions=4, n_waves=2, use_digest_table=True
-    )
-    assert s2["n_new"] == 30
-    result = spark.read.parquet(out)
-    assert result.count() == 80
-    assert result.select("url").distinct().count() == 80
-    # third run: nothing new
-    s3 = run_incremental(
-        spark, grown, out, ckpt, n_partitions=4, n_waves=2, use_digest_table=True
-    )
-    assert s3["n_new"] == 0 and spark.read.parquet(out).count() == 80
-    # 128-bit digests (md5 -> 16-byte binary), one per output url
-    dig = spark.read.parquet(f"{out}/_url_digests")
-    assert dict(dig.dtypes)["url_digest"] == "binary"
-    assert dig.select(F.length("url_digest")).distinct().collect()[0][0] == 16
-    assert dig.select("url_digest").distinct().count() == 80
-
-
-def test_digest_mode_grown_input_after_midrun_crash(spark, paths, tmp_path):
-    """ADVICE r2 crash window: digests now commit PER WAVE (data -> digests
-    -> checkpoint row), so even when the crawl input GROWS between a
-    mid-run crash and the retry (new snapshot id), already-committed urls
-    anti-join out via their digests and are never re-extracted into the
-    new delta."""
-    import glob
-
-    from gonova_document_parser_spark.checkpoint import run_incremental
-
-    out, ckpt = paths
-    first = generate_pages(spark, 60, num_partitions=2)
-    s1 = run_incremental(
-        spark, first, out, ckpt, n_partitions=4, n_waves=2, use_digest_table=True
-    )
-    snap = s1["run_id"]
-    # simulate dying after wave 1 of 2: partitions 2,3 lose their data,
-    # digests AND checkpoint rows (per-wave commit order means a real kill
-    # can only lose suffixes of that order)
-    kept = spark.read.parquet(ckpt).where(F.col("partition_id") < 2)
-    ckpt2 = str(tmp_path / "ckpt2")
-    kept.write.parquet(ckpt2)
-    for pid in (2, 3):
-        for p in glob.glob(f"{out}/delta={snap}/partition_id={pid}") + glob.glob(
-            f"{out}/_url_digests/delta={snap}/partition_id={pid}"
-        ):
-            shutil.rmtree(p)
-
-    grown = generate_pages(spark, 90, num_partitions=2)  # crawl grew mid-crash
-    run_incremental(
-        spark, grown, out, ckpt2, n_partitions=4, n_waves=2, use_digest_table=True
-    )
-    result = spark.read.parquet(out)
-    assert result.select("url").distinct().count() == 90
-    assert result.count() == 90  # committed urls were NOT extracted twice
-    dig = spark.read.parquet(f"{out}/_url_digests")
-    assert dig.select("url_digest").distinct().count() == 90
-
-
-def test_digest_mode_data_committed_digests_lost_crash(spark, paths, tmp_path):
-    """ADVICE r3 residual window: a kill BETWEEN a wave's data commit and
-    its digest commit leaves extracted rows under delta=S1 with no
-    digests.  With a grown input, the retry computes a new snapshot and
-    would re-extract those urls under delta=S2 while the orphaned
-    delta=S1 dirs remain — duplicate urls in whole-output reads.
-    reconcile_orphan_partitions removes the orphan dirs first, so every
-    url appears exactly once."""
-    import glob
-
-    from gonova_document_parser_spark.checkpoint import run_incremental
-
-    out, ckpt = paths
-    first = generate_pages(spark, 60, num_partitions=2)
-    s1 = run_incremental(
-        spark, first, out, ckpt, n_partitions=4, n_waves=2, use_digest_table=True
-    )
-    snap = s1["run_id"]
-    # simulate dying between wave 2's data write and its digest write:
-    # partitions 2,3 KEEP their data but lose digests + checkpoint rows
-    # (the harder suffix of the data -> digests -> ckpt commit order)
-    kept = spark.read.parquet(ckpt).where(F.col("partition_id") < 2)
-    ckpt2 = str(tmp_path / "ckpt2")
-    kept.write.parquet(ckpt2)
-    for pid in (2, 3):
-        for p in glob.glob(f"{out}/_url_digests/delta={snap}/partition_id={pid}"):
-            shutil.rmtree(p)
-    # orphaned data rows exist right now
-    assert spark.read.parquet(out).count() == 60
-
-    grown = generate_pages(spark, 90, num_partitions=2)  # crawl grew mid-crash
-    run_incremental(
-        spark, grown, out, ckpt2, n_partitions=4, n_waves=2, use_digest_table=True
-    )
-    result = spark.read.parquet(out)
-    assert result.select("url").distinct().count() == 90
-    assert result.count() == 90  # orphans reconciled away, no duplicates
-    dig = spark.read.parquet(f"{out}/_url_digests")
-    assert dig.select("url_digest").distinct().count() == 90
-    # invariant restored: every surviving partition dir has a completed row
-    import os
-
-    ck = spark.read.parquet(ckpt2).where(F.col("status") == "completed")
+    ck = spark.read.parquet(ckpt).where(F.col("status") == "completed")
     have_rows = {(r["run_id"], r["partition_id"]) for r in ck.collect()}
     for delta_dir in glob.glob(f"{out}/delta=*"):
         rid = os.path.basename(delta_dir).split("=", 1)[1]
         for pdir in glob.glob(f"{delta_dir}/partition_id=*"):
             pid = int(os.path.basename(pdir).split("=", 1)[1])
             assert (rid, pid) in have_rows
+
+
+def test_incremental_grown_input_after_midrun_crash(spark, paths, tmp_path):
+    """ADVICE r2 crash window: a delta dies after wave 1 of 2 and the
+    crawl input GROWS before the retry (new snapshot id).  The urls that
+    wave 1 committed anti-join out against the output and are never
+    re-extracted into the new delta; the lost ones extract once."""
+    from gonova_document_parser_spark.checkpoint import run_incremental
+
+    out, ckpt = paths
+    first = generate_pages(spark, 60, num_partitions=2)
+    s1 = run_incremental(spark, first, out, ckpt, n_partitions=4, n_waves=2)
+    snap = s1["run_id"]
+    # simulate dying after wave 1 of 2: partitions 2,3 lose their data
+    # AND checkpoint rows (the commit order data -> checkpoint row means
+    # a real kill can only lose suffixes of that order)
+    kept = spark.read.parquet(ckpt).where(F.col("partition_id") < 2)
+    ckpt2 = str(tmp_path / "ckpt2")
+    kept.write.parquet(ckpt2)
+    for pid in (2, 3):
+        shutil.rmtree(f"{out}/delta={snap}/partition_id={pid}", ignore_errors=True)
+
+    grown = generate_pages(spark, 90, num_partitions=2)  # crawl grew mid-crash
+    run_incremental(spark, grown, out, ckpt2, n_partitions=4, n_waves=2)
+    result = spark.read.parquet(out)
+    assert result.select("url").distinct().count() == 90
+    assert result.count() == 90  # committed urls were NOT extracted twice
+    _assert_every_partition_dir_has_completed_row(spark, out, ckpt2)
+
+
+def test_incremental_grown_input_after_data_committed_rows_lost_crash(
+    spark, paths, tmp_path
+):
+    """ADVICE r3 window: a kill BETWEEN a wave's data commit and its
+    checkpoint row leaves extracted rows under delta=S1 with no lineage
+    row.  The anti-join would count those urls as seen forever, and with
+    a grown input the retry computes a new snapshot, so S1 never resumes.
+    reconcile_orphan_partitions removes the orphan dirs first: every url
+    appears exactly once and every partition dir has a completed row."""
+    from gonova_document_parser_spark.checkpoint import run_incremental
+
+    out, ckpt = paths
+    first = generate_pages(spark, 60, num_partitions=2)
+    run_incremental(spark, first, out, ckpt, n_partitions=4, n_waves=2)
+    # simulate dying between wave 2's data write and its checkpoint row:
+    # partitions 2,3 KEEP their data but lose their checkpoint rows
+    kept = spark.read.parquet(ckpt).where(F.col("partition_id") < 2)
+    ckpt2 = str(tmp_path / "ckpt2")
+    kept.write.parquet(ckpt2)
+    # orphaned data rows exist right now
+    assert spark.read.parquet(out).count() == 60
+
+    grown = generate_pages(spark, 90, num_partitions=2)  # crawl grew mid-crash
+    run_incremental(spark, grown, out, ckpt2, n_partitions=4, n_waves=2)
+    result = spark.read.parquet(out)
+    assert result.select("url").distinct().count() == 90
+    assert result.count() == 90  # orphans reconciled away, no duplicates
+    # invariant restored: every surviving partition dir has a completed row
+    _assert_every_partition_dir_has_completed_row(spark, out, ckpt2)
+
+
+def test_incremental_repeated_urls_get_distinct_snapshots(spark, paths):
+    """A re-crawl may list a url twice.  Two deltas that each hold every
+    url twice must get different snapshot ids: an XOR digest cancels the
+    pairs to 0 in both, so the second delta looked already completed and
+    none of its urls were written."""
+    from gonova_document_parser_spark.checkpoint import run_incremental
+
+    out, ckpt = paths
+    first = generate_pages(spark, 20, num_partitions=1)
+    s1 = run_incremental(
+        spark, first.unionByName(first), out, ckpt, n_partitions=4, n_waves=2
+    )
+    assert s1["n_new"] == 40
+
+    grown = generate_pages(spark, 40, num_partitions=1)  # 20 new urls, each twice
+    s2 = run_incremental(
+        spark, grown.unionByName(grown), out, ckpt, n_partitions=4, n_waves=2
+    )
+    assert s2["n_new"] == 40
+    assert s2["run_id"] != s1["run_id"]
+    assert s2["partitions_done_before"] == 0
+    assert s2["n_docs"] == 40
+    result = spark.read.parquet(out)
+    want = {r["url"] for r in grown.select("url").collect()}
+    assert len(want) == 40
+    assert {r["url"] for r in result.select("url").collect()} == want
+    assert result.count() == 80  # every input row extracted exactly once
+    _assert_every_partition_dir_has_completed_row(spark, out, ckpt)
+
+
+def test_incremental_first_wave_killed_before_commit(spark, paths):
+    """A kill during the first delta's first data write leaves only the
+    write's hidden staging dir under delta=S.  The retry must run as a
+    first run: a dir tree with no parquet fails schema inference, and an
+    existing output is never silently treated as empty."""
+    import os
+
+    from gonova_document_parser_spark.checkpoint import run_incremental
+
+    out, ckpt = paths
+    staging = f"{out}/delta=delta-40-0/.spark-staging-0/partition_id=0"
+    os.makedirs(staging)
+    open(f"{staging}/part-00000.parquet", "wb").close()
+
+    pages = generate_pages(spark, 40, num_partitions=2)
+    s = run_incremental(spark, pages, out, ckpt, n_partitions=4, n_waves=2)
+    assert s["n_new"] == 40
+    result = spark.read.parquet(out)
+    assert result.count() == 40
+    assert result.select("url").distinct().count() == 40
+    assert not os.path.exists(f"{out}/delta=delta-40-0")
+    _assert_every_partition_dir_has_completed_row(spark, out, ckpt)
 
 
 def test_reconcile_noop_on_healthy_output(spark, paths):
@@ -325,12 +324,9 @@ def test_reconcile_noop_on_healthy_output(spark, paths):
 
     out, ckpt = paths
     pages = generate_pages(spark, 40, num_partitions=2)
-    run_incremental(
-        spark, pages, out, ckpt, n_partitions=4, n_waves=2, use_digest_table=True
-    )
+    run_incremental(spark, pages, out, ckpt, n_partitions=4, n_waves=2)
     assert reconcile_orphan_partitions(spark, out, ckpt) == 0
     assert spark.read.parquet(out).count() == 40
-    assert spark.read.parquet(f"{out}/_url_digests").count() == 40
 
 
 def test_bucketed_table_wave_pruning(spark, paths):
@@ -383,7 +379,7 @@ def test_bucketed_table_wave_pruning(spark, paths):
 
 
 def test_read_fallback_scoped_to_missing_path(spark, paths):
-    """ADVICE r2: only a MISSING output/digest path means 'first run'.  An
+    """ADVICE r2: only a MISSING output path means 'first run'.  An
     existing-but-unreadable path (here: a dir with no parquet) re-raises
     instead of silently reprocessing the entire input into duplicates."""
     import os

@@ -217,7 +217,7 @@ def test_store_params_sidecar_rejects_family_swap(spark, tmp_path):
 
 
 def test_grown_delta_after_bands_only_crash_no_double_dedup(spark, tmp_path):
-    """VERDICT r5 #7 (the _url_digests grown-input analog): a delta killed
+    """VERDICT r5 #7 (the run_incremental grown-input analog): a delta killed
     between the verdicts and bands writes is RETRIED WITH MORE ROWS (the
     crawl grew before the retry).  The content digest changes, so the
     retry is a fresh full run under a new snapshot; the old delta's

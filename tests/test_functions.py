@@ -788,14 +788,13 @@ def test_rare_word_stats(spark):
         (3, "words common unique3"),           # unique3 rare
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    for bc in (True, False):  # broadcast and shuffle paths agree
-        got = {
-            r["doc_id"]: (r["n_tokens"], r["n_rare"], r["rare_ratio"])
-            for r in rare_word_stats(df, max_count=2, broadcast_hot=bc).collect()
-        }
-        assert got[1] == (4, 1, 0.25)
-        assert got[2] == (5, 2, 0.4)
-        assert got[3] == (3, 1, round(1 / 3, 6))
+    got = {
+        r["doc_id"]: (r["n_tokens"], r["n_rare"], r["rare_ratio"])
+        for r in rare_word_stats(df, max_count=2).collect()
+    }
+    assert got[1] == (4, 1, 0.25)
+    assert got[2] == (5, 2, 0.4)
+    assert got[3] == (3, 1, round(1 / 3, 6))
 
 
 def test_incremental_minhash_dedup_store_roundtrip(spark):
