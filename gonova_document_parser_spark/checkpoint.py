@@ -137,22 +137,29 @@ def _local_frame(spark: SparkSession, schema: str, rows: list[tuple]) -> DataFra
     return spark.sql(sql if rows else sql + " WHERE false", args=args)
 
 
+def _completed_rows(
+    spark: SparkSession, checkpoint_path: str, run_id: str, input_snapshot: str
+) -> DataFrame | None:
+    """Completed checkpoint rows of this (run, snapshot); None before the
+    first commit (no checkpoint table yet)."""
+    ckpt = _read_parquet_if_exists(spark, checkpoint_path, CHECKPOINT_SCHEMA)
+    if ckpt is None:
+        return None
+    return ckpt.where(
+        (F.col("run_id") == run_id)
+        & (F.col("status") == "completed")
+        & (F.col("input_snapshot") == input_snapshot)
+    )
+
+
 def completed_partitions(
     spark: SparkSession, checkpoint_path: str, run_id: str, input_snapshot: str
 ) -> DataFrame:
     """Distinct partition_ids already completed for this (run, snapshot)."""
-    ckpt = _read_parquet_if_exists(spark, checkpoint_path, CHECKPOINT_SCHEMA)
-    if ckpt is None:  # first run: no checkpoint table yet
+    done = _completed_rows(spark, checkpoint_path, run_id, input_snapshot)
+    if done is None:  # first run: no checkpoint table yet
         return _local_frame(spark, "partition_id int", [])
-    return (
-        ckpt.where(
-            (F.col("run_id") == run_id)
-            & (F.col("status") == "completed")
-            & (F.col("input_snapshot") == input_snapshot)
-        )
-        .select("partition_id")
-        .distinct()
-    )
+    return done.select("partition_id").distinct()
 
 
 def _now() -> datetime.datetime:
@@ -446,6 +453,13 @@ def run_with_checkpoint(
     to call repeatedly with the same run_id: a fully-completed run is a
     no-op.
 
+    The returned totals fold the completed checkpoint rows read at the
+    start with the rows each wave commits, so closing the run reads the
+    checkpoint table no second time.  They count one row per partition id
+    (the first read, should a table ever hold two completed rows for one
+    id) and, like the resume lookup, only ``status == "completed"`` rows
+    of this ``(run_id, input_snapshot)``.
+
     Metrics ride the write pass via ``df.observe`` (per-partition
     conditional aggregates, retry-safe, computed by the same job that
     writes) — the extracted text is NOT re-read to meter it.
@@ -487,8 +501,14 @@ def run_with_checkpoint(
                 "be silently skipped — restage the source or raise "
                 "n_partitions"
             )
-    done = completed_partitions(spark, checkpoint_path, run_id, input_snapshot)
-    done_ids = {r["partition_id"] for r in done.collect()}  # <= n_partitions ints
+    # partition_id -> (n_docs, n_ok, n_err): the completed rows read once,
+    # then each wave's rows as it commits; the closing stats come from here
+    totals: dict[int, tuple[int, int, int]] = {}
+    done = _completed_rows(spark, checkpoint_path, run_id, input_snapshot)
+    if done is not None:
+        for r in done.select("partition_id", "n_docs", "n_ok", "n_err").collect():
+            totals.setdefault(r["partition_id"], (r["n_docs"], r["n_ok"], r["n_err"]))
+    done_ids = set(totals)
     waves = wave_grid(n_partitions, n_waves, done_ids)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -574,6 +594,7 @@ def run_with_checkpoint(
             "append"
         ).parquet(checkpoint_path)
         committed += len(wave_ids)
+        totals.update((r[1], (r[3], r[4], r[5])) for r in ckpt_rows)
         wave_docs = sum(r[3] for r in ckpt_rows)
         wave_secs = max((finished - started).total_seconds(), 1e-9)
         progress = {
@@ -591,23 +612,11 @@ def run_with_checkpoint(
         if on_progress is not None:
             on_progress(progress)
 
-    stats = (
-        spark.read.schema(CHECKPOINT_SCHEMA)
-        .parquet(checkpoint_path)
-        .where((F.col("run_id") == run_id) & (F.col("input_snapshot") == input_snapshot))
-        .agg(
-            F.countDistinct("partition_id").alias("parts"),
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_ok").alias("n_ok"),
-            F.sum("n_err").alias("n_err"),
-        )
-        .collect()[0]
-    )
     return {
         "run_id": run_id,
         "partitions_done_before": len(done_ids),
-        "partitions_total": stats["parts"],
-        "n_docs": stats["n_docs"],
-        "n_ok": stats["n_ok"],
-        "n_err": stats["n_err"],
+        "partitions_total": len(totals),
+        "n_docs": sum(t[0] for t in totals.values()),
+        "n_ok": sum(t[1] for t in totals.values()),
+        "n_err": sum(t[2] for t in totals.values()),
     }

@@ -5,15 +5,75 @@ equivalent exists (SURVEY §4): Arrow batch size ~64 docs ↔ the reference's
 BATCH_SIZE=64 page batching (``config.py:44-47``); AQE on for runtime skew
 handling (the reference has none); dynamic partition overwrite for
 idempotent per-partition checkpointed writes (§ checkpoint module).
+
+Importing this module also makes a reused Python worker stop re-reading
+the Spark install's own archives on every task (``exempt_spark_archives``).
 """
 
 from __future__ import annotations
 
 import os
+import zipimport
 
+import pyspark
 from pyspark.sql import SparkSession
 
 ARROW_DOCS_PER_BATCH = 64  # reference BATCH_SIZE=64 (config.py:44-47)
+
+
+def exempt_spark_archives(pyspark_archive: str | None) -> None:
+    """Skip the per-task directory re-read of archives under the Spark
+    install root that ``pyspark_archive`` (``<root>/python/lib/pyspark.zip``)
+    sits in.
+
+    Every Python task calls ``importlib.invalidate_caches()`` (in
+    ``setup_spark_files``), and on CPython 3.11 that makes each cached
+    ``zipimporter`` (one per imported subpackage prefix) re-read its
+    archive's whole directory: about 0.1-0.25 s per task on a worker that
+    has already run tasks.  Nothing in the install can change while the
+    worker runs, so ``zipimporter.invalidate_caches`` is replaced by one
+    that returns early for an archive whose realpath is under the root and
+    defers to the original method for every other archive — a
+    ``--py-files`` / ``addPyFile`` zip in SparkFiles' ``userFiles-*`` dir
+    keeps the per-task re-read.
+
+    The key is the install ROOT, not ``pyspark.zip`` / ``py4j-*.zip``:
+    Spark 4.1 also puts ``jars/spark-core_*.jar`` on the worker path, and
+    its two importers (the jar and its ``org/`` prefix) cost about 40 ms
+    each; exempting only the two zips still paid about 110 ms per task.
+
+    This runs at package import, not as a ``spark.python.daemon.module``:
+    the daemon starts before ``--py-files`` reach the path, so a daemon
+    module shipped in the package would fail every Python task on
+    executors that receive the package only through ``--py-files``.  Every
+    package UDF unpickles through a package module, whose import runs this
+    module, so a reused worker pays the re-read once, on its first task.
+
+    Does nothing when ``pyspark_archive`` is None — pyspark not imported
+    from a zip, as on a driver using pip pyspark — or not laid out as
+    ``<root>/python/lib/pyspark.zip`` (a pyspark.zip shipped with
+    ``--py-files`` would make its SparkFiles dir's grandparent the "root"),
+    or when the replacement is installed already."""
+    if pyspark_archive is None:
+        return
+    reread = zipimport.zipimporter.invalidate_caches
+    if hasattr(reread, "spark_root"):
+        return
+    lib = os.path.dirname(os.path.realpath(pyspark_archive))
+    python = os.path.dirname(lib)
+    if (os.path.basename(python), os.path.basename(lib)) != ("python", "lib"):
+        return  # not <root>/python/lib/pyspark.zip: no root to trust
+    root = os.path.join(os.path.dirname(python), "")
+
+    def invalidate_caches(self):
+        if not os.path.realpath(self.archive).startswith(root):
+            reread(self)
+
+    invalidate_caches.spark_root = root
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+exempt_spark_archives(getattr(pyspark.__loader__, "archive", None))
 
 
 def get_spark(

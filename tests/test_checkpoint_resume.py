@@ -31,6 +31,26 @@ def paths(tmp_path):
     return str(tmp_path / "out"), str(tmp_path / "ckpt")
 
 
+def _checkpoint_totals(spark, ckpt, run_id):
+    """The closing stats as a Spark aggregate over the checkpoint table."""
+    r = (
+        spark.read.parquet(ckpt)
+        .where((F.col("run_id") == run_id) & (F.col("status") == "completed"))
+        .agg(
+            F.countDistinct("partition_id").alias("partitions_total"),
+            F.sum("n_docs").alias("n_docs"),
+            F.sum("n_ok").alias("n_ok"),
+            F.sum("n_err").alias("n_err"),
+        )
+        .collect()[0]
+    )
+    return r.asDict()
+
+
+def _totals(stats):
+    return {k: stats[k] for k in ("partitions_total", "n_docs", "n_ok", "n_err")}
+
+
 def test_full_run_then_noop(spark, paths):
     out, ckpt = paths
     pages = generate_pages(spark, N_DOCS, num_partitions=4)
@@ -40,14 +60,19 @@ def test_full_run_then_noop(spark, paths):
     assert s1["partitions_done_before"] == 0
     assert s1["partitions_total"] == N_PARTS
     assert s1["n_docs"] == N_DOCS
+    assert _totals(s1) == _checkpoint_totals(spark, ckpt, "r1")
     result = spark.read.parquet(out)
     assert result.count() == N_DOCS
     assert result.select("url").distinct().count() == N_DOCS
 
+    seen = []
     s2 = run_with_checkpoint(
-        spark, pages, out, ckpt, run_id="r1", n_partitions=N_PARTS, n_waves=4
+        spark, pages, out, ckpt, run_id="r1", n_partitions=N_PARTS, n_waves=4,
+        on_progress=seen.append,
     )
     assert s2["partitions_done_before"] == N_PARTS  # no-op rerun
+    assert seen == []  # no wave ran, yet the totals are the full run's
+    assert _totals(s2) == _totals(s1)
     assert spark.read.parquet(out).count() == N_DOCS
 
 
@@ -457,6 +482,7 @@ def test_kill_after_first_wave_resumes_unfinished_grid_waves(
     assert [p["wave"] for p in seen] == list(range(1, len(resumed_done) + 1))
     assert all(p["n_waves"] == len(resumed_done) for p in seen)
     assert s["n_docs"] == N_DOCS
+    assert _totals(s) == _checkpoint_totals(spark, ckpt, "rk")
     result = spark.read.parquet(out)
     want = {r["url"] for r in pages.select("url").collect()}
     assert result.count() == N_DOCS
@@ -496,3 +522,4 @@ def test_checkpoint_rows_round_trip_one_file_per_wave(spark, paths, monkeypatch)
     assert [tuple(r)[1:] for r in got] == [tuple(r) for r in ref]
     assert [r["started_at"] for r in got] == [stamps[0]] * 2 + [stamps[2]] * 2
     assert len(glob.glob(f"{ckpt}/part-*")) == 2
+
