@@ -690,29 +690,137 @@ def test_outlink_host_graph_resolution(spark):
     }
 
 
-def test_pagerank_integer_exact_vs_reference(spark):
+def _pagerank_reference(edges, iters=5, damping_pct=85):
+    """Independent pure-Python replica of the integer recurrence with
+    ``pagerank_hosts``' edge semantics: a NULL host is a node, an edge from it or
+    with a NULL weight adds nothing, an edge to it still counts in its
+    source's out-weight; ``div`` truncates toward zero."""
+    SCALE = 1_000_000
+    BASE = (100 - damping_pct) * SCALE // 100
+    hosts = {h for s, d, _ in edges for h in (s, d)}
+    live = [(s, d, w) for s, d, w in edges if s is not None and w is not None]
+    W = {}
+    for s, _, w in live:
+        W[s] = W.get(s, 0) + w
+    r = {h: SCALE for h in hosts}
+    for _ in range(iters):
+        nxt = {h: BASE for h in hosts}
+        for s, d, w in live:
+            num, den = r[s] * damping_pct * w, 100 * W[s]
+            q = abs(num) // abs(den)
+            if d is not None:
+                nxt[d] += q if (num < 0) == (den < 0) else -q
+        r = nxt
+    return r
+
+
+def _random_host_graph(seed=7, n_hosts=200, n_edges=2000):
+    """Seeded graph with self-loops, source-only hosts (the first tenth is
+    never a destination) and sink-only hosts (the last tenth is never a
+    source)."""
+    import random
+
+    rng = random.Random(seed)
+    lo, hi = n_hosts // 10, n_hosts - n_hosts // 10
+    edges = [(f"h{i}", f"h{i}", rng.randint(1, 9)) for i in range(lo, hi, 9)]
+    while len(edges) < n_edges:
+        s = int(hi * rng.random() ** 2)  # skewed out-degree
+        edges.append((f"h{s}", f"h{rng.randrange(lo, n_hosts)}", rng.randint(1, 9)))
+    return edges
+
+
+_PAGERANK_CASES = {
+    "small": ([("a", "b", 2), ("a", "c", 1), ("b", "a", 1), ("c", "a", 3)], None),
+    "random": (_random_host_graph(), None),
+    "empty": ([], {}),
+    # outputs pinned from the recurrence run as Spark SQL joins (ANSI on)
+    "null_host": (
+        [(None, "a", 1), ("a", "b", 2), ("b", None, 1), ("b", "a", 1)],
+        {"a": 366004, "b": 508247, None: 150000},
+    ),
+    "self_loop_dangling": (
+        [("a", "a", 3), ("a", "b", 1), ("c", "a", 1)],
+        {"a": 909538, "b": 360679, "c": 150000},
+    ),
+    "null_weight": (
+        [("a", "b", None), ("a", "c", 2), ("c", "a", 1), ("d", "a", None)],
+        {"a": 1000000, "b": 150000, "c": 1000000, "d": 150000},
+    ),
+    "negative_weight": (
+        [("a", "b", -3), ("a", "c", 5), ("b", "a", 7), ("c", "a", 1), ("c", "b", -2)],
+        {"a": -12290905, "b": 5429884, "c": 9861022},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_PAGERANK_CASES))
+def test_pagerank_integer_exact_vs_reference(spark, case):
     from gonova_document_parser_spark.functions.webgraph import pagerank_hosts
 
-    edges = [("a", "b", 2), ("a", "c", 1), ("b", "a", 1), ("c", "a", 3)]
+    edges, pinned = _PAGERANK_CASES[case]
     df = spark.createDataFrame(edges, "src_host string, dst_host string, n_links long")
-    got = {r["host"]: r["rank_scaled"]
-           for r in pagerank_hosts(df, iters=5).collect()}
-
-    # independent pure-Python replica of the integer recurrence
-    SCALE, BASE = 1_000_000, 150_000
-    hosts = {"a", "b", "c"}
-    W = {"a": 3, "b": 1, "c": 3}
-    r = {h: SCALE for h in hosts}
-    for _ in range(5):
-        nxt = {h: BASE for h in hosts}
-        for s, d, w in edges:
-            nxt[d] += (r[s] * 85 * w) // (100 * W[s])
-        r = nxt
-    assert got == r
+    out = pagerank_hosts(df, iters=5)
+    assert out.schema.simpleString() == "struct<host:string,rank_scaled:bigint>"
+    rows = out.collect()
+    got = {r["host"]: r["rank_scaled"] for r in rows}
+    assert len(rows) == len(got)  # one row per host
+    assert got == _pagerank_reference(edges)
+    if pinned is not None:
+        assert got == pinned
+    if case == "random":  # the graph has what its docstring promises
+        srcs, dsts = {e[0] for e in edges}, {e[1] for e in edges}
+        assert len(got) == 200 and any(s == d for s, d, _ in edges)
+        assert srcs - dsts and dsts - srcs
     # determinism across runs (no float, no order dependence)
     again = {x["host"]: x["rank_scaled"]
              for x in pagerank_hosts(df, iters=5).collect()}
     assert got == again
+
+
+@pytest.mark.parametrize(
+    "edges,condition",
+    [
+        ([("a", "b", 0), ("b", "a", 1)], "DIVIDE_BY_ZERO"),  # W(a) = 0
+        ([("a", "b", 2**50), ("b", "a", 1)], "ARITHMETIC_OVERFLOW"),  # r * 85 * w
+    ],
+    ids=["zero_out_weight", "overflow"],
+)
+def test_pagerank_arithmetic_errors_raise(spark, edges, condition):
+    """int64 errors raise Spark's ANSI error: never wrapped or zero ranks."""
+    from pyspark.errors import ArithmeticException
+
+    from gonova_document_parser_spark.functions.webgraph import pagerank_hosts
+
+    df = spark.createDataFrame(edges, "src_host string, dst_host string, n_links long")
+    with pytest.raises(ArithmeticException, match=condition):
+        pagerank_hosts(df, iters=5).collect()
+
+
+def test_pagerank_runs_few_spark_jobs(spark):
+    """The iterations run on the driver over one collect of the edge list:
+    edge collect + noop write is a handful of jobs, where a checkpointed
+    Spark loop runs two or more per iteration (24 on this graph)."""
+    import pyarrow as pa
+
+    from gonova_document_parser_spark.functions.webgraph import pagerank_hosts
+
+    edges = _random_host_graph(seed=11, n_hosts=100, n_edges=500)
+    df = spark.createDataFrame(
+        pa.table({
+            "src_host": [e[0] for e in edges],
+            "dst_host": [e[1] for e in edges],
+            "n_links": pa.array([e[2] for e in edges], pa.int64()),
+        })
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("pagerank-jobs", "pagerank-jobs")
+    try:
+        pagerank_hosts(df, iters=5).write.format("noop").mode("overwrite").save()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("pagerank-jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 1 <= n_jobs <= 3, n_jobs
 
 
 def test_line_dedup_matches_python_reference_on_random_corpus(spark):
