@@ -47,16 +47,27 @@ _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
 
 
+# The sf tables' schemas, declared so that building a query runs no
+# schema-inference job (one Spark job per read otherwise);
+# tests/test_entry_contract.py checks each against the inferred schema.
+DOCS_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+EVENTS_SCHEMA = (
+    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string,"
+    " value double, props string"
+)
+EMB_SCHEMA = "vec_id bigint, embedding array<float>, label int"
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return spark.read.schema(DOCS_SCHEMA).parquet(f"{sf_dir}/documents.parquet")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return spark.read.schema(EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return spark.read.schema(EMB_SCHEMA).parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -910,14 +910,27 @@ def duplicated_spans(
     the curation gate cuts on it like any Gopher rule, but the signal is
     corpus-wide, not within-doc.
 
-    Scale shape: windows are hashed (md5 — 128 bits, no birthday loss at
-    corpus scale, DuckDB-reproducible) so the corpus-wide count groupBy
-    shuffles 16-byte keys, not window strings; the duplicated subset
-    joins back against the window stream by hash; the interval-union
-    coverage is pure array math inside one per-doc aggregation (sorted
-    starts: covered = window + sum(min(window, gap)) over consecutive
-    starts — no explode of covered positions).
+    Scale shape: the window stream ``(id, pos, wh)`` is built ONCE —
+    windows are hashed (md5: 128 bits, no birthday loss at corpus scale,
+    DuckDB-reproducible), so the one corpus-wide exchange moves 16-byte
+    keys, never window strings, token arrays or text.  A window is
+    duplicated when ``min(id) != max(id)`` over its hash partition, which
+    equals ``COUNT(DISTINCT id) >= 2`` for every non-float id type (both
+    ignore NULL ids; all-NULL gives NULL, which the filter drops), so no
+    DISTINCT aggregate and no join back to a second tokenize.  A hot
+    window (one planted in every doc) is ONE window partition: its rows
+    sit in one task's buffer, which spills to disk past Spark's window
+    buffer threshold instead of growing the heap.  The duplicated
+    windows group per doc into sorted starts, and the interval-union
+    coverage is pure array math (covered = window + sum(min(window, gap))
+    over consecutive starts — no explode of covered positions).  The
+    per-row ``n_toks`` side is a narrow scan left-joined on id: one
+    output row per input row; NULL ids and duplicate-free docs get
+    ``(id, 0, 0.0)``; rows sharing an id share its merged positions.
     """
+    from pyspark.sql import Window
+
+    by_wh = Window.partitionBy("wh")
     wins = fan_out(
         df.select(F.col(id_col), F.col(text_col)),
         min_bytes=EXPR_FANOUT_MIN_BYTES,
@@ -927,19 +940,16 @@ def duplicated_spans(
             "pos", "win"
         ),
     ).select(id_col, "pos", F.md5("win").alias("wh"))
-    dup = (
-        wins.groupBy("wh")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-        .where(F.col("nd") >= 2)
-        .select("wh")
-    )
     per_doc = (
-        wins.join(dup, "wh")
-        .groupBy(id_col)
-        .agg(
-            F.count_distinct("pos").alias("n_dup_windows"),
-            F.sort_array(F.collect_set("pos")).alias("ps"),
+        wins.select(
+            id_col,
+            "pos",
+            (F.min(id_col).over(by_wh) != F.max(id_col).over(by_wh)).alias("dup"),
         )
+        .where("dup")
+        .groupBy(id_col)
+        .agg(F.sort_array(F.collect_set("pos")).alias("ps"))
+        .select(id_col, "ps", F.size("ps").cast("bigint").alias("n_dup_windows"))
     )
     gaps = F.zip_with(
         F.slice("ps", 1, F.size("ps") - 1),
@@ -993,13 +1003,20 @@ def remove_duplicated_spans(
     (lowercased, whitespace-split — same tokenization every dedup
     operator here uses), preserving original token order.
 
-    Scale shape: same as ``duplicated_spans`` — 16-byte md5 shuffle keys
-    for the corpus-wide window count, first-occurrence selection is one
-    ``min(struct(doc_id, pos))`` riding the same groupBy, join-back by
-    hash, and the per-doc removal is pure array math (an indexed
-    ``filter`` over the token array against the sorted duplicate starts;
-    O(n_tokens x n_dup_spans) per doc, no explode of covered positions).
+    Scale shape: as ``duplicated_spans`` — one window stream
+    ``(id, pos, wh)`` of 16-byte md5 keys, and one window over the hash
+    partition carries both the duplicated mark (``min(id) != max(id)``)
+    and the first occurrence (``min(struct(id, pos))``): no DISTINCT
+    aggregate, no join back to a second tokenize.  A hot window is one
+    window partition, buffered in one task and spilled past Spark's
+    window buffer threshold.  The per-doc removal is pure array math (an
+    indexed ``filter`` over the token array against the sorted duplicate
+    starts; O(n_tokens x n_dup_spans) per doc, no explode of covered
+    positions) after a left join on id that keeps one row per input row.
     """
+    from pyspark.sql import Window
+
+    by_wh = Window.partitionBy("wh")
     wins = fan_out(
         df.select(F.col(id_col), F.col(text_col)),
         min_bytes=EXPR_FANOUT_MIN_BYTES,
@@ -1009,29 +1026,23 @@ def remove_duplicated_spans(
             "pos", "win"
         ),
     ).select(id_col, "pos", F.md5("win").alias("wh"))
-    firsts = (
-        wins.groupBy("wh")
-        .agg(
-            F.count_distinct(F.col(id_col)).alias("nd"),
-            F.min(
-                F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
-            ).alias("first"),
+    id_pos = F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
+    per_doc = (
+        wins.select(
+            id_col,
+            "pos",
+            (F.min(id_col).over(by_wh) != F.max(id_col).over(by_wh)).alias("dup"),
+            F.min(id_pos).over(by_wh).alias("first"),
         )
-        .where(F.col("nd") >= 2)
-        .select("wh", "first")
-    )
-    dup_occ = (
-        wins.join(firsts, "wh")
         .where(
-            ~(
+            F.col("dup")
+            & ~(
                 (F.col(id_col) == F.col("first.d"))
                 & (F.col("pos") == F.col("first.p"))
             )
         )
-        .select(id_col, "pos")
-    )
-    per_doc = dup_occ.groupBy(id_col).agg(
-        F.sort_array(F.collect_set("pos")).alias("ps")
+        .groupBy(id_col)
+        .agg(F.sort_array(F.collect_set("pos")).alias("ps"))
     )
     toks = df.select(F.col(id_col), tokens_expr(text_col).alias("toks"))
     joined = toks.join(per_doc, id_col, "left").select(

@@ -82,12 +82,25 @@ def get_spark(
     shuffle_partitions: int | None = None,
     configs: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Get or create the session with the engine's defaults; ``configs``
+    entries are applied last and win.
+
+    PySpark's DataFrame call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``).  With it on,
+    every wrapped DataFrame/Column API call pays an active-session lookup,
+    a conf read over py4j, a Python stack walk and a JVM origin set/clear
+    pair — most of a query's driver-side build time.  What is lost: the
+    query context of a DataFrame error no longer names the Python call
+    site (file and line) of the failing expression.  PySpark caches the
+    flag at the first wrapped call in the process, so it holds when this
+    function creates the process's first session."""
     master = master or os.environ.get("GONOVA_MASTER", "local[*]")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_DOCS_PER_BATCH)

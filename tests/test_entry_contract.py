@@ -33,6 +33,23 @@ def test_oracle_keys_subset_of_queries():
     assert len(set(qs) - set(os_)) <= 2
 
 
+@pytest.mark.parametrize(
+    "read, table",
+    [(E._docs, "documents"), (E._events, "events"), (E._emb, "embeddings")],
+)
+def test_declared_schema_matches_inferred(spark, read, table):
+    """The sf readers declare their schemas; drift in the generated
+    tables fails here rather than as a cast error deep in one query."""
+    inferred = spark.read.parquet(f"{SF_DIR}/{table}.parquet").schema
+    assert read(spark, SF_DIR).schema == inferred
+
+
+def test_docs_read_runs_no_spark_job(spark, spark_jobs):
+    """Every query builds on ``_docs``; with the schema declared, building
+    it schedules no schema-inference job."""
+    assert spark_jobs(lambda: E._docs(spark, SF_DIR)) == []
+
+
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb_connection(SF_DIR)

@@ -1190,6 +1190,139 @@ def test_remove_duplicated_spans_matches_python_reference(spark):
     assert got == expect
 
 
+def _span_corpus(ids):
+    """Rows ``(id, text)`` for the span operators, ids drawn from ``ids``
+    (eight distinct non-NULL ids): a block shared by two docs, a block
+    repeated only inside one doc, one 10-token window planted in every
+    row long enough to hold it but one, two rows per duplicate id, NULL-id
+    rows (one sharing the cross-doc block), and docs shorter than any
+    window."""
+    import random
+
+    rng = random.Random(7)
+
+    def filler(k):
+        return [f"f{rng.randrange(400)}" for _ in range(k)]
+
+    hot = [f"h{i}" for i in range(10)]
+    shared = [f"s{i}" for i in range(8)]
+    inner = [f"q{i}" for i in range(12)]
+    a, b, c, d, e, f, g, h = ids
+    docs = [
+        (a, filler(3) + shared + filler(4) + hot),
+        (b, hot + filler(5) + shared),
+        (c, inner + filler(2) + inner + hot),           # repeat inside c only
+        (d, filler(6) + hot + filler(6)),
+        (d, shared[:6] + filler(3) + hot),              # duplicate id d
+        (e, filler(12)),
+        (f, hot),                                       # exactly one window
+        (g, filler(3)),                                 # shorter than a window
+        (h, []),                                        # empty text
+        (None, filler(2) + shared + hot),
+        (None, hot + filler(1)),
+        (None, ["x", "y"]),
+    ]
+    return [(i, " ".join(t)) for i, t in docs]
+
+
+def _span_occurrences(rows, w):
+    """window text -> [(id, pos)] over every row, NULL ids included."""
+    occ: dict[str, list] = {}
+    for i, text in rows:
+        tk = text.split(" ")
+        for p in range(len(tk) - w + 1):
+            occ.setdefault(" ".join(tk[p : p + w]), []).append((i, p))
+    return occ
+
+
+def _dup_spans_replica(rows, w):
+    """Pure-Python duplicated_spans: a window is duplicated when >= 2
+    distinct non-NULL ids hold it; rows sharing an id share its merged
+    positions; NULL ids never match and read (None, 0, 0.0)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    ps: dict = {}
+    for lst in _span_occurrences(rows, w).values():
+        if len({i for i, _ in lst if i is not None}) >= 2:
+            for i, p in lst:
+                if i is not None:
+                    ps.setdefault(i, set()).add(p)
+    out = []
+    for i, text in rows:
+        n_toks = len(text.split(" "))
+        if i is None or i not in ps:
+            out.append((i, 0, 0.0))
+            continue
+        covered = len({t for p in ps[i] for t in range(p, p + w)})
+        frac = Decimal(repr(covered / n_toks)).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP
+        )
+        out.append((i, len(ps[i]), float(frac)))
+    return out
+
+
+def _remove_spans_replica(rows, w):
+    """Pure-Python remove_duplicated_spans with SQL NULL semantics: the
+    keeper is min (id, pos) with a NULL id sorting first; the keeper test
+    ``id = keeper_id AND pos = keeper_pos`` is NULL for every row when the
+    keeper's id is NULL, so only rows at the keeper's pos are spared."""
+    ps: dict = {}
+    for lst in _span_occurrences(rows, w).values():
+        if len({i for i, _ in lst if i is not None}) < 2:
+            continue
+        # NULLs first; two NULL ids compare equal, so pos decides
+        kd, kp = min(lst, key=lambda o: (o[0] is not None, o[0], o[1]))
+        for i, p in lst:
+            spared = p == kp if kd is None else (i, p) == (kd, kp)
+            if i is not None and not spared:
+                ps.setdefault(i, set()).add(p)
+    out = []
+    for i, text in rows:
+        tk = text.split(" ")
+        starts = ps.get(i, set())
+        kept = [t for j, t in enumerate(tk)
+                if not any(p <= j <= p + w - 1 for p in starts)]
+        out.append((i, " ".join(kept), len(kept), len(tk) - len(kept)))
+    return out
+
+
+@pytest.mark.parametrize(
+    "id_type, ids",
+    [("bigint", [1, 2, 3, 4, 5, 6, 7, 8]),
+     ("string", ["a", "b", "c", "d", "e", "f", "g", "h"])],
+)
+@pytest.mark.parametrize("w", [4, 10])
+def test_span_operators_match_python_replica(spark, id_type, ids, w):
+    """Both span operators against a pure-Python replica over duplicate
+    ids, NULL ids, a within-doc-only repeat, a hot window held by every
+    doc and docs shorter than the window: one output row per input row,
+    and the declared output schema."""
+    from collections import Counter
+
+    from gonova_document_parser_spark.functions.dedup import (
+        duplicated_spans,
+        remove_duplicated_spans,
+    )
+
+    rows = _span_corpus(ids)
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+    spans = duplicated_spans(df, window=w)
+    assert spans.dtypes == [
+        ("doc_id", id_type), ("n_dup_windows", "bigint"), ("dup_frac", "double"),
+    ]
+    got = Counter(tuple(r) for r in spans.collect())
+    assert got == Counter(_dup_spans_replica(rows, w))
+
+    removed = remove_duplicated_spans(df, window=w)
+    assert removed.dtypes == [
+        ("doc_id", id_type), ("clean_text", "string"),
+        ("n_kept", "int"), ("n_removed", "int"),
+    ]
+    got = Counter(tuple(r) for r in removed.collect())
+    assert got == Counter(_remove_spans_replica(rows, w))
+
+
 def test_connected_components_matches_union_find_on_random_graph(spark):
     import random
 

@@ -186,3 +186,21 @@ def test_package_reads_no_env_knobs_outside_session():
             if name in env_names or imported:
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
     assert offenders == []
+
+
+@pytest.mark.parametrize("op", ["duplicated_spans", "remove_duplicated_spans"])
+def test_span_operators_build_one_window_stream(spark, spark_jobs, op):
+    """Each span operator tokenizes and explodes its windows ONCE (one
+    Generate) and marks duplicated windows without a DISTINCT aggregate;
+    at sf0.01 it runs at most 4 Spark jobs into a noop sink."""
+    from gonova_document_parser_spark.functions import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    df = getattr(dedup, op)(docs, window=10)
+    plan = _plan(df)
+    assert plan.count("Generate") == 1, plan
+    assert "count(distinct" not in plan, plan
+    jobs = spark_jobs(
+        lambda: df.write.format("noop").mode("overwrite").save()
+    )
+    assert 1 <= len(jobs) <= 4, jobs
